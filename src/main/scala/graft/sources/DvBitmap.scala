@@ -1,7 +1,17 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.io.OutputFile
+import org.apache.parquet.io.api.{Binary, RecordConsumer}
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compressed per-file deletion bitmap (r12) — the scan-side answer to the
@@ -27,9 +37,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Instances are immutable and `Serializable` (primitive arrays only —
   * broadcast-friendly); [[serialize]]/[[DvBitmap.deserialize]] is the
-  * explicit storage codec for the dv parquet's `bitmap` column. The r11
-  * (fkey, pos) row format remains readable as the interchange/legacy
-  * format — [[DvBitmap.loadBitmaps]] accepts both.
+  * explicit storage codec for the dv parquet's `bitmap` column;
+  * [[DvBitmap.writeFile]] lands one `(fkey, bitmap, n)` file from an
+  * executor task and [[DvBitmap.loadBitmaps]] reads files back on the
+  * driver — neither starts a Spark job. The r11 (fkey, pos) row format
+  * remains readable as the interchange/legacy format.
   */
 final class DvBitmap private[sources] (
     private val keys: Array[Long],    // sorted chunk keys (pos >>> 16)
@@ -255,35 +267,120 @@ object DvBitmap {
       case None => false
     }
 
-  /** The per-FKEY bitmaps stored under the given dv parquet paths —
-    * accepts BOTH dv formats (r12 `(fkey, bitmap, n)` single-row-per-file
-    * and the legacy/interchange r11 `(fkey, pos)` row-per-position) in one
-    * mergeSchema read; several fragments per fkey (a merged split leaf)
-    * union. One Spark job over kilobyte–megabyte files; the driver holds
-    * only compressed bitmap bytes (~2 bits per deleted row worst-case, vs
-    * the ~40 bytes/row the r11 anti-join shipped).
+  /** The dv file columns: `fkey` string, `bitmap` binary, `n` long — the
+    * layout the r12 Spark writer produced, so every dv file reads alike.
+    */
+  private val FileSchema: MessageType = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
+    Types.buildMessage()
+      .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("fkey")
+      .optional(BINARY).named("bitmap")
+      .required(INT64).named("n")
+      .named("spark_schema")
+  }
+
+  // parquet's example Group writer would do, but it stores its schema into
+  // the Configuration it is given — here the session's shared one
+  private final class FileWriteSupport extends WriteSupport[(String, DvBitmap)] {
+    private var out: RecordConsumer = _
+    override def init(conf: Configuration): WriteSupport.WriteContext =
+      new WriteSupport.WriteContext(FileSchema, java.util.Collections.emptyMap())
+    override def prepareForWrite(rc: RecordConsumer): Unit = out = rc
+    override def write(r: (String, DvBitmap)): Unit = {
+      out.startMessage()
+      out.startField("fkey", 0); out.addBinary(Binary.fromString(r._1)); out.endField("fkey", 0)
+      out.startField("bitmap", 1)
+      out.addBinary(Binary.fromConstantByteArray(r._2.serialize))
+      out.endField("bitmap", 1)
+      out.startField("n", 2); out.addLong(r._2.cardinality); out.endField("n", 2)
+      out.endMessage()
+    }
+  }
+
+  private final class FileWriterBuilder(file: OutputFile)
+      extends ParquetWriter.Builder[(String, DvBitmap), FileWriterBuilder](file) {
+    override def self(): FileWriterBuilder = this
+    override def getWriteSupport(conf: Configuration): WriteSupport[(String, DvBitmap)] =
+      new FileWriteSupport
+  }
+
+  /** Write `bm` as the one-row dv file `(fkey, bitmap, n)` at `file` —
+    * the executor side of a merge-on-read commit: each per-fkey task lands
+    * its own kilobyte file, so no bitmap passes through the driver.
+    * Refuses to overwrite an existing file.
+    */
+  def writeFile(conf: Configuration, file: Path, fkey: String, bm: DvBitmap): Unit = {
+    val w = new FileWriterBuilder(HadoopOutputFile.fromPath(file, conf))
+      .withConf(conf)
+      .withWriteMode(ParquetFileWriter.Mode.CREATE)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .build()
+    try w.write((fkey, bm)) finally w.close()
+  }
+
+  /** The per-FKEY bitmaps stored under the given dv parquet paths, read
+    * on the DRIVER with parquet-hadoop through a bounded pool — dv files
+    * are kilobytes and a commit references one per touched data file, so
+    * a Spark job (schema merge + collect) would cost far more than the
+    * reads. Accepts BOTH dv formats: r12 `(fkey, bitmap, n)` one row per
+    * file and the legacy/interchange r11 `(fkey, pos)` one row per
+    * position (streamed into [[build]]). A directory argument reads every
+    * data file beneath it, skipping hidden and `_`-prefixed names
+    * (`_SUCCESS`, `.crc`) the way Spark's file index does; several
+    * fragments per fkey union. The driver holds only compressed bitmap
+    * bytes (~2 bits per deleted row worst-case, vs the ~40 bytes/row the
+    * r11 anti-join shipped).
     */
   def loadBitmaps(spark: SparkSession, dvPaths: Seq[String]): Map[String, DvBitmap] = {
-    if (dvPaths.isEmpty) return Map.empty
-    import spark.implicits._
-    val df = spark.read.option("mergeSchema", "true").parquet(dvPaths: _*)
-    val cols = df.columns.toSet
-    val fromBitmap: Array[(String, Array[Byte])] =
-      if (cols("bitmap"))
-        df.where(col("bitmap").isNotNull).select("fkey", "bitmap")
-          .as[(String, Array[Byte])].collect()
-      else Array.empty
-    val fromPos: Array[(String, Array[Byte])] =
-      if (cols("pos"))
-        df.where(col("pos").isNotNull)
-          .select(col("fkey"), col("pos").cast("long"))
-          .as[(String, Long)]
-          .groupByKey(_._1)
-          .mapGroups((fk, it) => (fk, build(it.map(_._2).toArray).serialize))
-          .collect()
-      else Array.empty
-    (fromBitmap ++ fromPos).groupBy(_._1).map { case (fk, frags) =>
-      fk -> frags.map(f => deserialize(f._2)).reduce(union)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = dvPaths.distinct.flatMap { s =>
+      val p = new Path(s)
+      dataFiles(p.getFileSystem(conf), p)
     }
+    if (files.isEmpty) return Map.empty
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(8, files.size))
+    val frags = try {
+      import scala.jdk.CollectionConverters._
+      val tasks: Seq[java.util.concurrent.Callable[Seq[(String, DvBitmap)]]] =
+        files.map(f => () => readFile(conf, f))
+      pool.invokeAll(tasks.asJava).asScala.flatMap(_.get()).toSeq
+    } finally pool.shutdown()
+    frags.groupBy(_._1).map { case (fk, fs) => fk -> fs.map(_._2).reduce(union) }
+  }
+
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+
+  /** `p` itself when it is a file, else every non-hidden file beneath it. */
+  private def dataFiles(fs: FileSystem, p: Path): Seq[Path] = {
+    val st = fs.getFileStatus(p)
+    if (st.isFile) Seq(st.getPath)
+    else fs.listStatus(p).toSeq.filterNot(c => hidden(c.getPath.getName))
+      .flatMap(c => if (c.isFile) Seq(c.getPath) else dataFiles(fs, c.getPath))
+  }
+
+  /** One dv file's fragments: its bitmap rows, plus its `(fkey, pos)` rows
+    * built into one bitmap per fkey.
+    */
+  private def readFile(conf: Configuration, file: Path): Seq[(String, DvBitmap)] = {
+    val reader = ParquetReader.builder(new GroupReadSupport(), file).withConf(conf).build()
+    val out = Seq.newBuilder[(String, DvBitmap)]
+    val positions = scala.collection.mutable.Map.empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+    try {
+      var g: Group = reader.read()
+      while (g != null) {
+        val t = g.getType
+        def has(c: String): Boolean = t.containsField(c) && g.getFieldRepetitionCount(c) > 0
+        if (has("bitmap"))
+          out += g.getString("fkey", 0) -> deserialize(g.getBinary("bitmap", 0).getBytes)
+        if (has("pos"))
+          positions.getOrElseUpdate(g.getString("fkey", 0),
+            new scala.collection.mutable.ArrayBuilder.ofLong) += g.getLong("pos", 0)
+        g = reader.read()
+      }
+    } finally reader.close()
+    out ++= positions.map { case (fk, ps) => fk -> build(ps.result()) }
+    out.result()
   }
 }

@@ -3460,7 +3460,7 @@ object ManifestStore {
       Seq.empty, keepIdentity = true)
     val del = live.where(coalesce(cond, lit(false)))
       .select(col(FkeyCol).as("fkey"), col(PosCol).as("pos"))
-    writeDvAndTag(spark, fs, rootP, root, touched, del) match {
+    writeDvAndTag(spark, rootP, root, touched, del) match {
       case None => (0L, 0, before.version) // nothing matched; dvDir = vacuum food
       case Some((tagged, replacedSig, deleted)) =>
         val v = commitReplacing(fs, rootP, replacedSig,
@@ -3499,7 +3499,7 @@ object ManifestStore {
       Seq.empty, keepIdentity = true)
     val matched = live.where(coalesce(cond, lit(false)))
     val del = matched.select(col(FkeyCol).as("fkey"), col(PosCol).as("pos"))
-    writeDvAndTag(spark, fs, rootP, root, touched, del) match {
+    writeDvAndTag(spark, rootP, root, touched, del) match {
       case None => (0L, 0, before.version) // nothing matched
       case Some((tagged, replacedSig, nUpdated)) =>
         val updated = matched.select(table.fieldNames.toSeq.map { n =>
@@ -3524,59 +3524,50 @@ object ManifestStore {
   /** The shared deletion-vector WRITE of [[deleteMorFrom]] and
     * [[upsertMorFrom]]: `del` = (fkey, pos) of the rows to delete, over
     * LIVE rows of `touched` only. Each touched file's positions pack into
-    * ONE compressed [[DvBitmap]] row `(fkey, bitmap, n)` (r12 — built
-    * distributed per fkey group, merged with the file's OLD vector via
-    * broadcast, so the read side never pays a per-position join), written
-    * as one dv file per touched file. Returns the re-pointed entries plus
-    * the NEW deletion count — or None when nothing matched (the orphaned
-    * dv directory is vacuum food, like a no-match CoW rewrite). The
-    * touched slice is scanned ONCE (the write IS the scan); per-file
-    * totals come from the written kilobyte dv tree's `n` column.
+    * ONE compressed [[DvBitmap]], merged with the file's OLD vector, and
+    * the per-fkey task writes it as the one-row dv file
+    * `dv-<uuid>/fk=<fkey>/part-<task attempt>.parquet` itself
+    * ([[DvBitmap.writeFile]]) and returns `(fkey, file, n)` — ONE Spark
+    * job; the driver collects only those small rows, never a bitmap. A
+    * failed or speculative attempt leaves a file no manifest references
+    * (vacuum removes it with the dir). Old vectors come from the cached
+    * broadcast the touched-slice scan in `del` has just built for the
+    * same entries ([[dvBroadcastFor]]), so they are not reloaded. Returns
+    * the re-pointed entries plus the NEW deletion count — or None when
+    * nothing matched (any written dv files are vacuum food, like a
+    * no-match CoW rewrite).
     */
-  private def writeDvAndTag(spark: SparkSession, fs: FileSystem, rootP: Path,
-                            root: String, touched: Seq[ManifestEntry],
-                            del: DataFrame)
+  private def writeDvAndTag(spark: SparkSession, rootP: Path, root: String,
+                            touched: Seq[ManifestEntry], del: DataFrame)
       : Option[(Seq[ManifestEntry], Map[String, Option[String]], Long)] = {
-    val withOldDv = touched.filter(_.dv.exists(_.rows > 0))
-    // old vectors are per-file compressed bitmaps — kilobytes; broadcast
-    // into the per-fkey merge instead of re-shipping their positions as rows
-    val oldBc = spark.sparkContext.broadcast(
-      DvBitmap.loadBitmaps(spark, withOldDv.flatMap(_.dv.map(_.path))))
-    val sp = spark
-    import sp.implicits._
-    val bitmapRows = del.select(col("fkey"), col("pos")).as[(String, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (fk, it) =>
-        var bm = DvBitmap.build(it.map(_._2).toArray)
-        oldBc.value.get(fk).foreach(old => bm = DvBitmap.union(bm, old))
-        (fk, bm.serialize, bm.cardinality)
-      }.toDF("fkey", "bitmap", "n")
-    val dvDir = new Path(dataDir(rootP), s"dv-${UUID.randomUUID()}")
-    // duplicate the key into a partition column so the written FILE keeps
-    // its fkey; repartition-by-key puts each fkey in one task → one file
-    // per fk leaf
-    // maxRecordsPerFile=0: a session-level file-size cap would split an fk
-    // leaf into several part files and break the one-dv-file-per-entry
-    // invariant (review r11; single-row leaves make it unlikely, kept for
-    // defense)
-    // r15: cache the kilobyte bitmap frame so the per-file totals come
-    // from the SAME computed rows the write lands — previously the totals
-    // were read back from the just-written parquet tree (schema-infer +
-    // rescan, plus an exception-path for the all-empty case), a second
-    // full plan+execute of the dv pipeline per MoR commit
-    val bitmapCached = bitmapRows.cache()
-    val totals: Map[String, Long] =
-      try {
-        val t = bitmapCached.select("fkey", "n")
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (t.nonEmpty)
-          bitmapCached.withColumn("fk", col("fkey")).repartition(col("fk"))
-            .write.option("maxRecordsPerFile", "0").partitionBy("fk")
-            .parquet(dvDir.toString)
-        t
-      } finally bitmapCached.unpersist()
     val fkeyOf: ManifestEntry => String = e =>
       org.apache.commons.codec.digest.DigestUtils.md5Hex(e.path)
+    val withOldDv = touched.filter(_.dv.exists(_.rows > 0))
+    // the cached broadcast is keyed by data-file path; tasks reach it
+    // through their fkey (md5 of that path)
+    val oldBc = if (withOldDv.isEmpty) None else Some(dvBroadcastFor(spark, withOldDv))
+    val oldPathOf = withOldDv.map(e => fkeyOf(e) -> e.path).toMap
+    val dvDir = new Path(dataDir(rootP), s"dv-${UUID.randomUUID()}").toString
+    val confBc = spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+    val sp = spark
+    import sp.implicits._
+    val written: Array[(String, String, Long)] =
+      try del.select(col("fkey"), col("pos")).as[(String, Long)]
+        .groupByKey(_._1)
+        .mapGroups { (fk, it) =>
+          var bm = DvBitmap.build(it.map(_._2).toArray)
+          for (p <- oldPathOf.get(fk); bc <- oldBc;
+               old <- bc.value.get(org.apache.spark.unsafe.types.UTF8String.fromString(p)))
+            bm = DvBitmap.union(bm, old)
+          val file = new Path(s"$dvDir/fk=$fk",
+            s"part-${org.apache.spark.TaskContext.get().taskAttemptId()}.parquet")
+          DvBitmap.writeFile(confBc.value.value, file, fk, bm)
+          (fk, file.toString, bm.cardinality)
+        }.collect()
+      finally confBc.destroy()
+    val totals = written.map { case (fk, _, n) => fk -> n }.toMap
+    val fileOf = written.map { case (fk, f, _) => fk -> f }.toMap
     val byFkey = touched.map(e => fkeyOf(e) -> e).toMap
     val unknown = totals.keySet -- byFkey.keySet
     require(unknown.isEmpty,
@@ -3593,41 +3584,11 @@ object ManifestStore {
     val originals = touched.filter(e => newCounts.contains(fkeyOf(e)))
     val tagged = originals.map { e =>
       val fk = fkeyOf(e)
-      val dvFile = dvFileOf(spark, fs, dvDir, fk)
       require(totals(fk) <= e.rows.getOrElse(Long.MaxValue),
         s"dv positions (${totals(fk)}) exceed physical rows for ${e.path}")
-      e.copy(dv = Some(DvRef(dvFile.toString, totals(fk))))
+      e.copy(dv = Some(DvRef(fileOf(fk), totals(fk))))
     }
     Some((tagged, dvSignature(originals), newCounts.values.sum))
-  }
-
-  /** THE deletion-vector file of one fk leaf. The repartition-by-key +
-    * maxRecordsPerFile=0 write normally leaves exactly one file; if a
-    * writer/config ever splits the leaf anyway, the files are MERGED into
-    * one (the one-dv-file-per-entry invariant is restored, the whole MoR
-    * operation does not abort — advice r11; aborting here would happen
-    * only AFTER the full dv write, turning a packing quirk into an
-    * availability failure).
-    */
-  private[graft] def dvFileOf(spark: SparkSession, fs: FileSystem,
-                              dvDir: Path, fk: String): Path = {
-    val leaf = new Path(dvDir, s"fk=$fk")
-    val dvFiles = fs.listStatus(leaf)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    if (dvFiles.length == 1) return dvFiles.head.getPath
-    require(dvFiles.nonEmpty, s"no dv file under $leaf")
-    val mergeDir = new Path(dvDir, s"merged/fk=$fk")
-    // format-agnostic: (fkey, bitmap, n) rows and legacy (fkey, pos) rows
-    // both just need to land in one file ([[DvBitmap.loadBitmaps]] unions
-    // several fragments per fkey on read)
-    spark.read.parquet(leaf.toString)
-      .coalesce(1).write.option("maxRecordsPerFile", "0")
-      .mode(SaveMode.ErrorIfExists).parquet(mergeDir.toString)
-    val merged = fs.listStatus(mergeDir)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    require(merged.length == 1,
-      s"dv merge fallback still produced ${merged.length} files under $mergeDir")
-    merged.head.getPath
   }
 
   /** Rewrite dv-carrying files WITHOUT their deleted rows and drop the
@@ -3958,7 +3919,7 @@ object ManifestStore {
         val keysSide = upsertKeysSide(spark, updates, keyCols, maxProbeKeys, p)
         val del = touchedRows.join(keysSide, keyCols, "left_semi")
           .select(col(FkeyCol).as("fkey"), col(PosCol).as("pos"))
-        writeDvAndTag(spark, fs, rootP, root, p.touched, del) match {
+        writeDvAndTag(spark, rootP, root, p.touched, del) match {
           case None => // no existing row matched: a pure insert after all
             val v = commitReplacing(fs, rootP, Map.empty, p.mineUpdates,
               p.seeded, maxRetries, tornGraceMs, refuseEmpty = false,
@@ -4070,7 +4031,7 @@ object ManifestStore {
       }
     val del = touchedRows.join(keysSide, keyCols, "left_semi")
       .select(col(FkeyCol).as("fkey"), col(PosCol).as("pos"))
-    writeDvAndTag(spark, fs, rootP, root, touched, del) match {
+    writeDvAndTag(spark, rootP, root, touched, del) match {
       case None => // no existing row matched any key: a pure insert
         if (mineUpdates.isEmpty) return (0L, 0, before.version) // full no-op
         val v = commitReplacing(fs, rootP, Map.empty, mineUpdates, seeded,

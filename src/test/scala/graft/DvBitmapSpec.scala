@@ -71,20 +71,73 @@ class DvBitmapSpec extends SparkSpec {
     assert(!DvBitmap.deleted(m, UTF8String.fromString("file:/b.parquet"), 7L))
   }
 
+  /** Three on-disk inputs of the same vectors must load identically, on
+    * the driver, with no Spark job: the tree the r12-r16 Spark writer
+    * left (`fk=` leaves, `_SUCCESS`, `.crc` side files), passed as files
+    * and as its directory; files from the task-side [[DvBitmap.writeFile]];
+    * and legacy (fkey, pos) rows. Fragments of one fkey union across
+    * formats.
+    */
   test("loadBitmaps reads both the bitmap format and the legacy (fkey,pos) rows") {
     import SharedSpark.spark.implicits._
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("graft-dvload").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(dir).getFileSystem(conf)
+    val rnd = new scala.util.Random(11)
+    val want: Map[String, Array[Long]] = Map(
+      "k1" -> Array(3L, 9L, 100000L),
+      "k2" -> Array(0L),
+      // dense: one bitset container plus a sparse one
+      "k3" -> (Array.fill(6000)(rnd.nextInt(65536).toLong) :+ (1L << 20)))
+    val bms = want.map { case (k, ps) => k -> DvBitmap.build(ps) }
+    // the Spark writer's tree: one fk= leaf per vector
+    bms.toSeq.map { case (k, bm) => (k, bm.serialize, bm.cardinality) }
+      .toDF("fkey", "bitmap", "n").withColumn("fk", col("fkey"))
+      .repartition(col("fk")).write.option("maxRecordsPerFile", "0")
+      .partitionBy("fk").parquet(s"$dir/spark")
+    assert(fs.exists(new Path(s"$dir/spark/_SUCCESS")))
+    val sparkFiles = bms.keys.toSeq.flatMap(k =>
+      fs.listStatus(new Path(s"$dir/spark/fk=$k")).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet")))
+    // the checksum side files a checksummed local filesystem leaves beside
+    // each part file (the shared SparkSession's filesystem writes none): not parquet,
+    // so reading one would fail
+    sparkFiles.foreach { f =>
+      val crc = new Path(f.getParent, s".${f.getName}.crc")
+      if (!fs.exists(crc)) { val o = fs.create(crc); o.write(Array[Byte](1, 2, 3)); o.close() }
+    }
+    // the task-side writer
+    val taskFiles = bms.toSeq.map { case (k, bm) =>
+      val f = new Path(s"$dir/task/fk=$k", "part-0.parquet")
+      DvBitmap.writeFile(conf, f, k, bm)
+      f.toString
+    }
     // legacy interchange format: one row per position
-    Seq(("k1", 3L), ("k1", 9L), ("k2", 0L)).toDF("fkey", "pos")
+    want.toSeq.flatMap { case (k, ps) => ps.map(k -> _) }.toDF("fkey", "pos")
       .coalesce(1).write.parquet(s"$dir/legacy")
-    // r12 format: one bitmap row per file
-    val bm = DvBitmap.build(Array(9L, 100000L))
-    Seq(("k1", bm.serialize, bm.cardinality)).toDF("fkey", "bitmap", "n")
-      .coalesce(1).write.parquet(s"$dir/bitmap")
-    val loaded = DvBitmap.loadBitmaps(spark, Seq(s"$dir/legacy", s"$dir/bitmap"))
-    assert(loaded.keySet == Set("k1", "k2"))
+
+    def loaded(paths: Seq[String]): Map[String, Seq[Long]] = {
+      val (m, jobs) = org.apache.spark.JobsOf(spark.sparkContext)(
+        DvBitmap.loadBitmaps(spark, paths))
+      assert(jobs.isEmpty, s"loadBitmaps started ${jobs.size} Spark job(s) for $paths")
+      m.map { case (k, bm) => k -> bm.positions.toSeq }
+    }
+    val expected = want.map { case (k, ps) => k -> ps.distinct.sorted.toSeq }
+    assert(loaded(sparkFiles.map(_.toString)) == expected)
+    assert(loaded(Seq(s"$dir/spark")) == expected)
+    assert(loaded(taskFiles) == expected)
+    assert(loaded(Seq(s"$dir/task")) == expected)
+    assert(loaded(Seq(s"$dir/legacy")) == expected)
+    assert(loaded(Seq.empty).isEmpty)
+    // the task-side file keeps the Spark writer's columns and types
+    assert(spark.read.parquet(taskFiles.head).schema ==
+      spark.read.parquet(sparkFiles.head.toString).schema)
     // k1 fragments union across formats
-    assert(loaded("k1").positions.toSeq == Seq(3L, 9L, 100000L))
-    assert(loaded("k2").positions.toSeq == Seq(0L))
+    val extra = DvBitmap.build(Array(7L, 100000L))
+    val extraFile = new Path(s"$dir/extra", "part-0.parquet")
+    DvBitmap.writeFile(conf, extraFile, "k1", extra)
+    assert(loaded(Seq(s"$dir/legacy", extraFile.toString))("k1") == Seq(3L, 7L, 9L, 100000L))
   }
 }

@@ -1826,29 +1826,92 @@ class ManifestStoreSpec extends SparkSpec {
     assert(e.getMessage.contains("literal '.'"), e.getMessage)
   }
 
-  /** advice r12: a split fk leaf (a writer/config that ignores the
-    * maxRecordsPerFile=0 packing) merges into ONE dv file instead of
-    * aborting the whole MoR operation after the dv write.
+  /** Each merge-on-read op's tasks write their dv files themselves: every
+    * tagged entry points at ONE file in its fk leaf under that op's own
+    * dv dir, and the manifest references only the file the winning task
+    * attempt returned — a stray file beside it (a failed or speculative
+    * attempt's leftover) is never read.
     */
-  test("dvFileOf merges a split fk leaf instead of aborting") {
-    val dvDir = new Path(freshRoot(), "dv-split")
-    val fs = dvDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fk = "0123456789abcdef0123456789abcdef"
-    (0L until 100L).map(p => (fk, p)).toDF("fkey", "pos")
-      .repartition(3).write.parquet(new Path(dvDir, s"fk=$fk").toString)
-    val leafFiles = fs.listStatus(new Path(dvDir, s"fk=$fk"))
-      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    assert(leafFiles > 1, "precondition: the leaf must actually be split")
-    val merged = ManifestStore.dvFileOf(spark, fs, dvDir, fk)
-    val back = spark.read.parquet(merged.toString)
-    assert(back.count() == 100L)
-    assert(back.select("pos").as[Long].collect().sorted.toSeq == (0L until 100L))
-    // single-file leaves return their file untouched (no merge write)
-    val fk2 = "fedcba9876543210fedcba9876543210"
-    Seq((fk2, 1L)).toDF("fkey", "pos").coalesce(1)
-      .write.parquet(new Path(dvDir, s"fk=$fk2").toString)
-    val single = ManifestStore.dvFileOf(spark, fs, dvDir, fk2)
-    assert(single.getParent.getName == s"fk=$fk2")
+  test("MoR dv files: one per tagged entry; stray attempt files are never read") {
+    import org.apache.spark.sql.sources.LessThan
+    import graft.sources.DvBitmap
+    val root = freshRoot()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(root).getFileSystem(conf)
+    ManifestStore.append(spark, batch(0, 100).repartition(4), root)
+    def md5(s: String) = org.apache.commons.codec.digest.DigestUtils.md5Hex(s)
+    def dvFilesOf(version: Long): Seq[(String, Path)] = {
+      val before = ManifestStore.snapshotAt(spark, root, version - 1).get.files
+        .map(f => f.path -> f.dv.map(_.path)).toMap
+      val tagged = ManifestStore.snapshotAt(spark, root, version).get.files
+        .filter(f => f.dv.isDefined && before.get(f.path).exists(_ != f.dv.map(_.path)))
+      assert(tagged.nonEmpty, s"v$version tagged no file")
+      val files = tagged.map(f => f.path -> new Path(f.dv.get.path))
+      files.foreach { case (data, dv) =>
+        assert(dv.getParent.getName == s"fk=${md5(data)}", dv.toString)
+        assert(fs.getFileStatus(dv).isFile, s"$dv is not a file")
+        val leaf = fs.listStatus(dv.getParent).map(_.getPath.getName)
+          .filterNot(n => n.startsWith(".") || n.startsWith("_"))
+        assert(leaf.toSeq == Seq(dv.getName), s"fk leaf holds ${leaf.toSeq}")
+      }
+      val opDirs = files.map(_._2.getParent.getParent).distinct
+      assert(opDirs.size == 1 && opDirs.head.getName.startsWith("dv-") &&
+        opDirs.head.getParent.getName == "data", s"dv dirs of v$version: $opDirs")
+      files
+    }
+    val (nd, _, vd) = ManifestStore.deleteWhereMergeOnRead(spark, root, Seq(LessThan("id", 30L)))
+    assert(nd == 30L)
+    val delFiles = dvFilesOf(vd)
+    val (nu, _, vu) = ManifestStore.upsertByKeyMergeOnRead(spark, root,
+      batch(20, 60).withColumn("payload", lit("new")), Seq("id"))
+    assert(nu == 30L)
+    val upFiles = dvFilesOf(vu)
+    assert(upFiles.map(_._2.getParent.getParent).toSet
+      .intersect(delFiles.map(_._2.getParent.getParent).toSet).isEmpty,
+      "each op writes under its own dv dir")
+    val rows = ManifestStore.read(spark, root).orderBy("id").collect().toSeq
+    assert(rows.size == 80 && rows.count(_.getString(1) == "new") == 40)
+    // a stray attempt's file in each fk leaf: it would delete EVERY row
+    // position 0..999 of its file if anything read it
+    val stray = upFiles.map { case (data, dv) =>
+      val f = new Path(dv.getParent, "part-999999.parquet")
+      DvBitmap.writeFile(conf, f, md5(data), DvBitmap.build((0L until 1000L).toArray))
+      f.toString
+    }
+    ManifestStore.clearCachesForTest()
+    assert(ManifestStore.read(spark, root).orderBy("id").collect().toSeq == rows,
+      "a stray dv file in an fk leaf must not change what the table reads")
+    val (nd2, _, vd2) = ManifestStore.deleteWhereMergeOnRead(spark, root, Seq(LessThan("id", 35L)))
+    assert(nd2 == 15L)
+    val referenced = ManifestStore.latestSnapshot(spark, root).get.files.flatMap(_.dv.map(_.path))
+    assert(stray.forall(s => !referenced.contains(s)))
+    assert(ids(ManifestStore.read(spark, root)) == (35L until 100L))
+  }
+
+  /** The dv step's Spark work is pinned as a COUNT (stable on a noisy
+    * host): a merge-on-read delete on a file that already carries a
+    * vector runs as ONE SQL execution — the scan plus the per-fkey task
+    * that writes the dv file — and loading the old vector (from the dv
+    * file on the driver, for the scan's broadcast; reused by the write)
+    * starts no job of its own.
+    */
+  test("MoR delete on a dv-carrying file: one SQL execution, old vectors load without a job") {
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
+    val root = freshRoot()
+    ManifestStore.append(spark, batch(0, 100).coalesce(1), root)
+    assert(ManifestStore.deleteWhereMergeOnRead(spark, root, Seq(LessThan("id", 10L)))._1 == 10L)
+    assert(ManifestStore.latestSnapshot(spark, root).get.files.forall(_.dv.exists(_.rows == 10L)))
+    val ((n, tagged, _), jobs) = org.apache.spark.JobsOf(spark.sparkContext)(
+      ManifestStore.deleteWhereMergeOnRead(spark, root,
+        Seq(GreaterThanOrEqual("id", 10L), LessThan("id", 25L))))
+    assert(n == 15L && tagged == 1)
+    assert(jobs.nonEmpty && jobs.forall(_.isDefined),
+      s"every job must run inside the dv step's SQL execution: $jobs")
+    assert(jobs.flatten.distinct.size == 1,
+      s"the dv step must be ONE SQL execution, saw ${jobs.flatten.distinct}")
+    assert(ManifestStore.latestSnapshot(spark, root).get.files.map(_.dv.map(_.rows)) ==
+      Seq(Some(25L)))
+    assert(ids(ManifestStore.read(spark, root)) == (25L until 100L))
   }
 
   /** advice r12: a pathologically stale hint (persistently failing hint
