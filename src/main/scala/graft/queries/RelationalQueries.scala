@@ -2117,8 +2117,8 @@ object RelationalQueries {
       require(v == 1L && snap.op == "convert" && snap.partCols == Seq("bucket"))
       require(snap.files.map(_.path).toSet == plainPaths,
         "convert must reference the ORIGINAL files — zero bytes move")
-      require(snap.files.forall(e => e.rows.isDefined && e.stats.nonEmpty),
-        "footer harvest must stock rows + stats for pruning")
+      require(snap.files.forall(_.stats.nonEmpty),
+        "footer harvest must stock stats for pruning")
       // partition pruning engages immediately on the adopted table
       require(M.prunedEntries(snap,
         Seq(org.apache.spark.sql.sources.EqualTo("bucket", 1))).size <
@@ -2159,7 +2159,7 @@ object RelationalQueries {
       require(snap.files.map(f => f.path -> f.dv.map(_.path)) ==
         v1.files.map(f => f.path -> f.dv.map(_.path)),
         "restored state must be exactly v1's file+dv list")
-      require(M.readVersion(s, root, 2L).count() == v1.files.map(_.rows.get).sum - nDel,
+      require(M.readVersion(s, root, 2L).count() == v1.files.map(_.rows).sum - nDel,
         "the deleted state must stay time-travelable")
       M.table(s, root)
     },

@@ -41,7 +41,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[DvBitmap.writeFile]] lands one `(fkey, bitmap, n)` file from an
   * executor task and [[DvBitmap.loadBitmaps]] reads files back on the
   * driver — neither starts a Spark job. The r11 (fkey, pos) row format
-  * remains readable as the interchange/legacy format.
+  * stays readable: r11 tables record a schema and per-file row counts,
+  * so they are still supported, and their dv files use that format.
   */
 final class DvBitmap private[sources] (
     private val keys: Array[Long],    // sorted chunk keys (pos >>> 16)
@@ -324,8 +325,8 @@ object DvBitmap {
     * are kilobytes and a commit references one per touched data file, so
     * a Spark job (schema merge + collect) would cost far more than the
     * reads. Accepts BOTH dv formats: r12 `(fkey, bitmap, n)` one row per
-    * file and the legacy/interchange r11 `(fkey, pos)` one row per
-    * position (streamed into [[build]]). A directory argument reads every
+    * file and the r11 `(fkey, pos)` one row per position (streamed into
+    * [[build]]) — r11 tables are still read, so their dv files are too. A directory argument reads every
     * data file beneath it, skipping hidden and `_`-prefixed names
     * (`_SUCCESS`, `.crc`) the way Spark's file index does; several
     * fragments per fkey union. The driver holds only compressed bitmap

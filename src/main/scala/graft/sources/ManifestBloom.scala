@@ -80,7 +80,7 @@ private[sources] object ManifestBloom {
           (if (isLong(i)) q.cast(LongType) else q).as(s"__c$i")
         }: _*)
     val expect = spark.sparkContext.broadcast(
-      entries.map(e => strip(e.path) -> math.max(1L, e.rows.getOrElse(e.bytes / 64)))
+      entries.map(e => strip(e.path) -> math.max(1L, e.rows))
         .toMap)
     val partials = df.queryExecution.toRdd.mapPartitions { rows =>
       val acc = scala.collection.mutable.HashMap.empty[String, Array[BloomFilter]]

@@ -95,7 +95,7 @@ final class ManifestDataSource extends RelationProvider
       throw new java.util.NoSuchElementException(
         s"no committed manifest under $root — create the table (one append) " +
           "before streaming from it"))
-    ManifestStore.tableSchemaOf(spark, snap)
+    ManifestStore.tableSchemaOf(snap)
   }
 
   private def changeFeedOf(p: Map[String, String]): Boolean =
@@ -351,7 +351,7 @@ final class ManifestDataSource extends RelationProvider
       new BaseRelation with org.apache.spark.sql.sources.TableScan {
         override def sqlContext: SQLContext = outer
         override def schema: org.apache.spark.sql.types.StructType =
-          ManifestStore.tableSchemaOf(spark, snap)
+          ManifestStore.tableSchemaOf(snap)
         override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
           throw new UnsupportedOperationException(
             s"table under $root carries live deletion vectors which the raw " +
@@ -390,7 +390,7 @@ final class ManifestDataSource extends RelationProvider
       case Some(snap) =>
         def shape(st: StructType) =
           st.fields.map(f => f.name -> f.dataType.catalogString).toMap
-        val base = ManifestStore.tableSchemaOf(spark, snap)
+        val base = ManifestStore.tableSchemaOf(snap)
         require(shape(schema) == shape(base),
           s"provided schema $schema does not match the manifest's $base — " +
             "graft-manifest tables own their schema (drop the explicit " +

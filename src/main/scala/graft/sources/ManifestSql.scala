@@ -479,7 +479,7 @@ final case class ManifestAlterColumnCommand(target: Either[String, Seq[String]],
       case None => ManifestStore.dropColumn(spark, root, column)
     }
     val snap = ManifestStore.latestSnapshot(spark, root).get
-    val logical = ManifestStore.tableSchemaOf(spark, snap)
+    val logical = ManifestStore.tableSchemaOf(snap)
     // stored catalog layout: data columns first, partition columns last
     // (alterTable, not alterTableDataSchema — the latter refuses renames/
     // drops by design; the manifest commit above is the source of truth)
@@ -716,9 +716,7 @@ final case class ManifestDetailCommand(target: Either[String, Seq[String]])
         s"no committed manifest under $root"))
     val committedAt = ManifestStore.history(spark, root, 1)
       .select("committed_at").collect().headOption.map(_.getTimestamp(0)).orNull
-    val liveRows: Any =
-      if (snap.files.exists(_.rows.isEmpty)) null
-      else snap.files.map(f => f.rows.get - f.dv.map(_.rows).getOrElse(0L)).sum
+    val liveRows = snap.files.map(f => f.rows - f.dv.map(_.rows).getOrElse(0L)).sum
     val fmtVersion =
       if (snap.colMap.nonEmpty || snap.droppedPhys.nonEmpty ||
           snap.constraints.nonEmpty || snap.properties.nonEmpty) 3 else 2
@@ -761,7 +759,7 @@ final case class ManifestAlterTypeCommand(target: Either[String, Seq[String]],
     identOpt.foreach { ident =>
       val meta = spark.sessionState.catalog.getTableMetadata(ident)
       val snap = ManifestStore.latestSnapshot(spark, root).get
-      val logical = ManifestStore.tableSchemaOf(spark, snap)
+      val logical = ManifestStore.tableSchemaOf(snap)
       val newFull = org.apache.spark.sql.types.StructType(
         logical.fields.filterNot(f => meta.partitionColumnNames.contains(f.name)) ++
           meta.partitionSchema.fields)

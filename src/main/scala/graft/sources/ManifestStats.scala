@@ -137,17 +137,19 @@ private[graft] object ManifestStats {
   /** Comparison-domain tag for a skippable Spark type; None = never
     * collected (binary, nested, interval — residual filters still apply,
     * files just never prune on these columns). Each tag's REQUIRED parquet
-    * physical shape is enforced per chunk inside [[chunkStats]]: a legacy
-    * file whose column was written under a DIFFERENT Spark type (pre-r10
-    * tables had no append-time type refusal) must not have its values
-    * reinterpreted in the wrong domain — e.g. a double chunk's min read
-    * as long truncates toward zero and records a bound NARROWER than the
-    * data, the one direction stats must never err (review r10). Decimals
+    * physical shape is enforced per chunk inside [[chunkStats]]: a file
+    * whose column was written under a DIFFERENT Spark type than the
+    * table's must not have its values reinterpreted in the wrong domain —
+    * e.g. a double chunk's min read as long truncates toward zero and
+    * records a bound NARROWER than the data, the one direction stats must
+    * never err (review r10). Two paths meet such files: CONVERT TO
+    * MANIFEST adopts parquet written by any writer, and ALTER COLUMN TYPE
+    * widening leaves old files in their narrow physical type. Decimals
     * (r11, VERDICT r10 #4) render as plain decimal strings in the scale
     * of the chunk's OWN decimal annotation (the annotation names the true
     * numeric domain, whatever physical type carries the unscaled value),
     * compared via BigDecimal — scale-insensitive, so a (12,2) literal
-    * prunes correctly against a legacy (10,3)-written file.
+    * prunes correctly against a (10,3)-written adopted file.
     */
   private def tagFor(dt: DataType): Option[String] = dt match {
     case IntegerType | ShortType | ByteType | LongType => Some("long")
@@ -235,8 +237,8 @@ private[graft] object ManifestStats {
       case "decimal" =>
         // the chunk's OWN decimal annotation names the numeric domain; a
         // decimal-typed table column whose chunk carries NO decimal
-        // annotation (legacy file written under a non-decimal type) is
-        // refused — never reinterpreted
+        // annotation (an adopted file written under a non-decimal type)
+        // is refused — never reinterpreted
         pt.getLogicalTypeAnnotation match {
           case ann: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
             def render(v: Any): Option[String] = v match {
@@ -390,7 +392,7 @@ private[graft] object ManifestStats {
     * describe the file; `partition` its exact hive values (None = not a
     * partitioned table; inner None = the hive null partition).
     */
-  def mightMatch(filter: Filter, rows: Option[Long],
+  def mightMatch(filter: Filter, rows: Long,
                  stats: Map[String, ColStats],
                  partition: Option[Map[String, Option[String]]],
                  partTags: Map[String, String]): Boolean = {
@@ -418,7 +420,7 @@ private[graft] object ManifestStats {
         }
         case None => statsFor(col) match {
           case Some(ColStats(tag, mn, mx, nulls)) =>
-            if (mn.isEmpty && mx.isEmpty) !(rows.contains(nulls)) // all-null file
+            if (mn.isEmpty && mx.isEmpty) rows != nulls // all-null file
             else (for {
               lit <- toBound(tag, v); lo <- mn; hi <- mx
             } yield keep(compareBounds(tag, lo, lit), compareBounds(tag, hi, lit)))
@@ -446,7 +448,7 @@ private[graft] object ManifestStats {
       case IsNotNull(c) => partValue(c) match {
         case Some(pv) => pv.isDefined
         case None => statsFor(c) match {
-          case Some(s) if s.nulls >= 0 && rows.contains(s.nulls) => false // all null
+          case Some(s) if s.nulls >= 0 && rows == s.nulls => false // all null
           case _ => true
         }
       }
@@ -461,7 +463,7 @@ private[graft] object ManifestStats {
             case Some(ColStats("string", Some(mn), Some(mx), _)) =>
               !(compareBounds("string", mx, v) < 0 ||
                 (!mn.startsWith(v) && compareBounds("string", mn, v) > 0))
-            case Some(ColStats(_, None, None, nulls)) => !rows.contains(nulls)
+            case Some(ColStats(_, None, None, nulls)) => rows != nulls
             case _ => true
           }
         }
@@ -485,7 +487,7 @@ private[graft] object ManifestStats {
               (for (lit <- toBound(tag, v)) yield
                 !(compareBounds(tag, mn, lit) == 0 && compareBounds(tag, mx, lit) == 0))
                 .getOrElse(true)
-            case Some(ColStats(_, None, None, nulls)) => !rows.contains(nulls)
+            case Some(ColStats(_, None, None, nulls)) => rows != nulls
             case _ => true
           }
         }
@@ -516,12 +518,11 @@ private[graft] object ManifestStats {
     * "d":{"p":<dvPath>,"n":<deletedRows>}}` — compact, tab/newline-free by
     * [[JsonText]] escaping, so it rides the manifest's third tab field.
     */
-  def renderMeta(rows: Option[Long], stats: Map[String, ColStats],
+  def renderMeta(rows: Long, stats: Map[String, ColStats],
                  partition: Option[Map[String, Option[String]]],
-                 dv: Option[ManifestStore.DvRef] = None): Option[String] = {
-    if (rows.isEmpty && stats.isEmpty && partition.isEmpty && dv.isEmpty) return None
+                 dv: Option[ManifestStore.DvRef] = None): String = {
     val parts = Seq.newBuilder[String]
-    rows.foreach(r => parts += s""""r":$r""")
+    parts += s""""r":$rows"""
     dv.foreach(d => parts +=
       s""""d":{"p":${JsonText.quote(d.path)},"n":${d.rows}}""")
     if (stats.nonEmpty) {
@@ -540,7 +541,7 @@ private[graft] object ManifestStats {
       }
       parts += s""""p":{${cols.mkString(",")}}"""
     }
-    Some(s"{${parts.result().mkString(",")}}")
+    s"{${parts.result().mkString(",")}}"
   }
 
   // one shared mapper: construction is Jackson's expensive part and this
@@ -550,11 +551,11 @@ private[graft] object ManifestStats {
 
   /** Inverse of [[renderMeta]]; None on malformed input — INCLUDING
     * wrong-typed fields (a lenient coercion like a non-numeric "n" → 0
-    * would degrade to WRONG stats, e.g. "no nulls here", and prune rows
-    * away; malformed must degrade to stats-LESS, which only disables
-    * skipping — review r10).
+    * would record WRONG stats, e.g. "no nulls here", and prune rows
+    * away — review r10) and a missing row count `"r"`. The manifest
+    * parser refuses the manifest on None.
     */
-  def parseMeta(json: String): Option[(Option[Long], Map[String, ColStats],
+  def parseMeta(json: String): Option[(Long, Map[String, ColStats],
       Option[Map[String, Option[String]]], Option[ManifestStore.DvRef])] =
     try {
       import com.fasterxml.jackson.databind.JsonNode
@@ -564,10 +565,7 @@ private[graft] object ManifestStats {
         if (n.isIntegralNumber && n.canConvertToLong) Some(n.asLong) else None
       def textOf(n: JsonNode): Option[String] =
         if (n.isTextual) Some(n.asText()) else None
-      val rows = Option(node.get("r")) match {
-        case None => None
-        case Some(r) => Some(longOf(r).getOrElse(return None))
-      }
+      val rows = Option(node.get("r")).flatMap(longOf).getOrElse(return None)
       val stats = Option(node.get("s")) match {
         case None => Map.empty[String, ColStats]
         case Some(s) if !s.isObject => return None
@@ -591,8 +589,7 @@ private[graft] object ManifestStats {
       }
       // a malformed dv is NOT degradable: absence means "no rows deleted",
       // so dropping it would resurrect deleted rows — the whole meta
-      // refuses instead (the entry then fails the manifest parse posture
-      // of wrong-never, slow-maybe)
+      // refuses instead
       val dv = Option(node.get("d")) match {
         case None => None
         case Some(d) if !d.isObject => return None

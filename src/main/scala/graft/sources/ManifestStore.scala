@@ -105,16 +105,17 @@ object ManifestStore {
     */
   final case class DvRef(path: String, rows: Long)
 
-  /** One live data file: URI + size, plus (r10) its row count, per-column
+  /** One live data file: URI + size, its physical row count, per-column
     * min/max/null stats and — on a partitioned table — its exact hive
-    * partition values (inner None = the hive null partition). Rows/stats/
-    * partition are None/empty on entries committed by pre-r10 writers;
-    * every absence only disables skipping, never correctness. `dv` (r11)
-    * is the file's deletion vector — rows at those positions are DELETED
-    * and every read path must apply it (merge-on-read DELETE).
+    * partition values (inner None = the hive null partition). Every entry
+    * carries its row count: the manifest parser refuses a file line
+    * without one (a pre-r10 table). Missing stats only disable skipping,
+    * never correctness. `dv` (r11) is the file's deletion vector — rows
+    * at those positions are DELETED and every read path must apply it
+    * (merge-on-read DELETE).
     */
   final case class ManifestEntry(path: String, bytes: Long,
-                                 rows: Option[Long] = None,
+                                 rows: Long,
                                  stats: Map[String, ColStats] = Map.empty,
                                  partition: Option[Map[String, Option[String]]] = None,
                                  dv: Option[DvRef] = None)
@@ -126,10 +127,11 @@ object ManifestStore {
     * txnVersion. Compactions and plain appends preserve the map.
     * `schema` is the table schema AS OF this version (logical — includes
     * partition columns, which are not stored in the data files);
-    * `partCols` the hive partition column names. Both empty on pre-r10
-    * manifests (reads fall back to footer-inferred schemas there).
+    * `partCols` the hive partition column names. `schema` is None only
+    * on a snapshot without files: the manifest parser refuses a
+    * file-bearing manifest without a `schema=` line (a pre-r10 table).
     * `op` (r12) names THE operation that committed this version
-    * (append/compact/materialize/upgrade/delete/upsert/mor-delete/
+    * (append/compact/materialize/delete/upsert/mor-delete/
     * mor-upsert) — the Delta `dataChange` idea as a commit-level marker:
     * physical-only ops ([[PhysicalOps]]) let a tail/change-feed consumer
     * SKIP the rewrite instead of refusing, so table maintenance stops
@@ -222,8 +224,7 @@ object ManifestStore {
     * conservation from the manifest's own counts, so a mislabeled commit
     * can never smuggle a data change past a tail).
     */
-  private val PhysicalOps = Set("compact", "materialize", "upgrade",
-    "bloom", "bloom-drop")
+  private val PhysicalOps = Set("compact", "materialize", "bloom", "bloom-drop")
 
   /** Manifest FORMAT versions (r13, advice r12). v1 is the original
     * self-contained format, still read (and was silently extended with
@@ -260,8 +261,18 @@ object ManifestStore {
     * treating it as torn would silently serve the previous intact
     * version's (stale) data.
     */
-  final class UnsupportedManifestVersionException(msg: String)
+  class UnsupportedManifestVersionException(msg: String)
     extends java.io.IOException(msg)
+
+  /** A checksum-valid manifest of a pre-r10 table: it lists files but has
+    * no `schema=` line, or a file line carries no parseable row count.
+    * Such tables are no longer read — every path that resolves the
+    * version refuses, exactly like a newer format; it is never read as a
+    * torn slot (that would serve an older version, or let vacuum treat
+    * the version's files as unreferenced).
+    */
+  final class PreR10ManifestException(msg: String)
+    extends UnsupportedManifestVersionException(msg)
 
   /** How many delta manifests may stack on one self-contained checkpoint
     * before the next commit writes a fresh checkpoint (the Delta-log
@@ -347,10 +358,9 @@ object ManifestStore {
     // rule depends on it: unknown markers are skipped, file lines are not)
     require(!MarkerShape.matcher(f.path).find(),
       s"file path collides with the marker-line shape: ${f.path}")
-    body.append(f.path).append('\t').append(f.bytes.toString)
-    ManifestStats.renderMeta(f.rows, f.stats, f.partition, f.dv)
-      .foreach(m => body.append('\t').append(m))
-    body.append('\n'): Unit
+    body.append(f.path).append('\t').append(f.bytes.toString).append('\t')
+      .append(ManifestStats.renderMeta(f.rows, f.stats, f.partition, f.dv))
+      .append('\n'): Unit
   }
 
   /** STREAM a manifest body straight into `out` through an md5 digest —
@@ -618,18 +628,20 @@ object ManifestStore {
     }
   }
 
-  /** Parse a manifest; None when torn/corrupt (bad header, bad checksum,
-    * version mismatch with its file name, malformed schema json) —
-    * callers treat that version slot as not (yet) committed. A format
-    * version ABOVE [[MaxFormatVersion]] throws
-    * [[UnsupportedManifestVersionException]] instead: silently treating a
-    * newer writer's commit as torn would serve stale data.
+  /** Read and parse manifest `v` of `root`; None when absent or torn/
+    * corrupt (bad header, bad checksum, version mismatch with its file
+    * name, malformed schema json) — callers treat that version slot as
+    * not (yet) committed. A format version ABOVE [[MaxFormatVersion]] and
+    * a pre-r10 manifest throw [[UnsupportedManifestVersionException]]
+    * instead: silently treating either as torn would serve stale data.
     */
-  private def parse(bytes: Array[Byte], expectVersion: Long): Option[Parsed] =
-    try parseStrict(bytes, expectVersion)
-    catch {
-      case e: UnsupportedManifestVersionException => throw e
-      case scala.util.control.NonFatal(_) => None
+  private def parse(fs: FileSystem, root: Path, v: Long): Option[Parsed] =
+    readManifestBytes(fs, root, v).flatMap { bytes =>
+      try parseStrict(bytes, root, v)
+      catch {
+        case e: UnsupportedManifestVersionException => throw e
+        case scala.util.control.NonFatal(_) => None
+      }
     }
 
   /** The manifest body iff the checksum trailer validates — the ONE
@@ -647,7 +659,8 @@ object ManifestStore {
     else Some(body)
   }
 
-  private def parseStrict(bytes: Array[Byte], expectVersion: Long): Option[Parsed] = {
+  private def parseStrict(bytes: Array[Byte], root: Path,
+                          expectVersion: Long): Option[Parsed] = {
     // the NEWER-format refusal must come BEFORE checksum validation: a
     // future format may change the trailer itself, and validating first
     // would silently read its manifests as torn — exactly the stale-data
@@ -680,6 +693,12 @@ object ManifestStore {
     val txns = Map.newBuilder[String, Long]
     val removed = Seq.newBuilder[String]
     val files = Seq.newBuilder[ManifestEntry]
+    // the ONE pre-r10 check: every file line carries a parseable row
+    // count and a self-contained manifest with files records its schema
+    def preR10(what: String): Nothing = throw new PreR10ManifestException(
+      s"manifest v$expectVersion under $root $what — a pre-r10 table, which " +
+        "is no longer read; adopt its data directory as a new table with " +
+        "CONVERT TO MANIFEST (ManifestStore.convertParquet)")
     for (l <- lines.drop(2)) {
       if (l.startsWith("schema=")) {
         schema = Some(DataType.fromJson(l.stripPrefix("schema=")).asInstanceOf[StructType])
@@ -732,20 +751,11 @@ object ManifestStore {
         // never read as a malformed file entry (the r12 break, advice r12)
       } else {
         l.split("\t", -1) match {
-          case Array(p, b) => files += ManifestEntry(p, b.toLong)
+          case Array(p, _) => preR10(s"lists $p without a row count")
           case Array(p, b, meta) =>
-            ManifestStats.parseMeta(meta) match {
-              case Some((rows, stats, part, dv)) =>
-                files += ManifestEntry(p, b.toLong, rows, stats, part, dv)
-              case None if meta.contains("\"d\":") =>
-                // a meta that CARRIES a deletion vector but fails to parse
-                // must tear the whole manifest (fall back to the previous
-                // intact version) — the stats-less degrade below would
-                // silently RESURRECT the deleted rows
-                return None
-              case None => // stats-less degrade: only disables skipping
-                files += ManifestEntry(p, b.toLong)
-            }
+            val (rows, stats, part, dv) = ManifestStats.parseMeta(meta)
+              .getOrElse(preR10(s"lists $p without a parseable row count"))
+            files += ManifestEntry(p, b.toLong, rows, stats, part, dv)
           case _ => return None
         }
       }
@@ -757,7 +767,9 @@ object ManifestStore {
           txns.result(), schema, partCols, removed.result(), files.result(),
           addedBytes, colMap, droppedPhys, constraints, properties, bloomIdx)))
       case None =>
-        Some(FullManifest(Snapshot(expectVersion, files.result(), txns.result(),
+        val all = files.result()
+        if (all.nonEmpty && schema.isEmpty) preR10("lists files without a schema line")
+        Some(FullManifest(Snapshot(expectVersion, all, txns.result(),
           schema, partCols.getOrElse(Nil), op, tableId,
           checkpointVersion = expectVersion, deltaDepth = 0,
           addedBytes = addedBytes, colMap = colMap.getOrElse(Map.empty),
@@ -900,7 +912,7 @@ object ManifestStore {
         case Some(anchor) =>
           return finishChain(fs, root, v, anchor, recs)
         case None =>
-          readManifestBytes(fs, root, cur).flatMap(parse(_, cur)) match {
+          parse(fs, root, cur) match {
             case None => return None // torn link: the whole chain is unresolvable
             case Some(FullManifest(s)) =>
               snapshotCache.put(key, s)
@@ -1059,7 +1071,7 @@ object ManifestStore {
                                             root: String): Option[Snapshot] = {
     val (fs, rootP) = fsFor(spark, root)
     def resolveUncached(v: Long): Option[Snapshot] =
-      readManifestBytes(fs, rootP, v).flatMap(parse(_, v)).flatMap {
+      parse(fs, rootP, v).flatMap {
         case FullManifest(s) => Some(s)
         case DeltaManifest(d) => resolveUncached(d.base).flatMap(applyDelta(_, d))
       }
@@ -1246,7 +1258,7 @@ object ManifestStore {
   private def writeBatch(fs: FileSystem, root: Path, dfLogical: DataFrame,
                          partitionByLogical: Seq[String],
                          internalRewrite: Boolean = false,
-                         colMap: Map[String, String] = Map.empty,
+                         colMap: Map[String, String],
                          constraints: Seq[Constraint] = Nil): Seq[ManifestEntry] = {
     def phys(n: String): String = colMap.getOrElse(n, n)
     // constraints enforce on the LOGICAL frame (their targets/exprs speak
@@ -1268,11 +1280,12 @@ object ManifestStore {
     // and its residual filters would resolve to the wrong column — refuse
     // at the write, where the cause is nameable (review r11). Rename the
     // field (e.g. a_b) instead. Scoped to EXTERNAL frames: a maintenance
-    // rewrite (compact/delete/upsert-rewrite/materialize) of a legacy table
-    // whose committed schema already carries the dotted name must keep
-    // working — the collision predates this guard and the harvest already
-    // drops colliding keys from stats, so refusing here would leave such
-    // tables permanently un-compactable and un-deletable (advice r11).
+    // rewrite (compact/delete/upsert-rewrite/materialize) of a table whose
+    // committed schema already carries the dotted name must keep working —
+    // CONVERT TO MANIFEST adopts such columns from plain parquet, and the
+    // harvest already drops colliding keys from stats, so refusing here
+    // would leave such tables permanently un-compactable and un-deletable
+    // (advice r11).
     def dottedIn(prefix: String, dt: DataType): Seq[String] = dt match {
       case st: StructType => st.fields.flatMap { f =>
         val name = if (prefix.isEmpty) f.name else s"$prefix.${f.name}"
@@ -1330,13 +1343,13 @@ object ManifestStore {
       // Path.toString, NOT toUri.toString: a hive-escaped partition dir
       // contains literal '%', which toUri would double-encode (%252F) —
       // the stored string must round-trip through new Path(s) exactly
-      ManifestEntry(st.getPath.toString, st.getLen, Some(rows), stats, part)
+      ManifestEntry(st.getPath.toString, st.getLen, rows, stats, part)
     }
   }
 
   /** Pooled footer-stats harvest (metadata-only round-trips, cost scales
     * with file COUNT) — one definition shared by [[writeBatch]] and
-    * [[upgradeTable]] so the pool sizing/shutdown/error discipline cannot
+    * [[convertParquet]] so the pool sizing/shutdown/error discipline cannot
     * drift between them. Keys are `Path.toString` (the manifest's own path
     * convention).
     */
@@ -1452,7 +1465,7 @@ object ManifestStore {
     val (fs, rootP) = fsFor(spark, root)
     if (partitionBy.nonEmpty) requirePartitionable(df, partitionBy)
     val cur = latestSnapshot(spark, root)
-    val legacy = requireCompatibleSchema(spark, df, root, partitionBy, cur)
+    requireCompatibleSchema(df, root, partitionBy, cur)
     val mine = writeBatch(fs, rootP, df, partitionBy,
       colMap = cur.map(_.colMap).getOrElse(Map.empty),
       constraints = cur.map(_.constraints).getOrElse(Nil))
@@ -1469,7 +1482,7 @@ object ManifestStore {
       if (expectNoTable && base.exists(_.files.nonEmpty)) None
       else Some(Snapshot(0L, base.map(_.files).getOrElse(Seq.empty) ++ mine,
         base.map(_.txns).getOrElse(Map.empty),
-        Some(mergedSchema(base, legacy, batchSchema)),
+        Some(mergedSchema(base, batchSchema)),
         partColsOf(base, partitionBy), op = "append",
         colMap = base.map(_.colMap).getOrElse(Map.empty),
         droppedPhys = base.map(_.droppedPhys).getOrElse(Nil),
@@ -1523,7 +1536,7 @@ object ManifestStore {
     if (pre.exists(_.txns.getOrElse(appId, -1L) >= batchId))
       return pre.get.version
     if (partitionBy.nonEmpty) requirePartitionable(df, partitionBy)
-    val legacy = requireCompatibleSchema(spark, df, root, partitionBy, pre)
+    requireCompatibleSchema(df, root, partitionBy, pre)
     // an UNpartitioned empty micro-batch still writes one 0-row part file
     // (partitioned empties write none) — drop such files rather than
     // commit them, or every all-filtered batch of a long-running format
@@ -1531,7 +1544,7 @@ object ManifestStore {
     val written = writeBatch(fs, rootP, df, partitionBy,
       colMap = pre.map(_.colMap).getOrElse(Map.empty),
       constraints = pre.map(_.constraints).getOrElse(Nil))
-    val (zeroRow, mine) = written.partition(_.rows.contains(0L))
+    val (zeroRow, mine) = written.partition(_.rows == 0L)
     zeroRow.foreach(e =>
       fs.delete(new org.apache.hadoop.fs.Path(e.path), false): Unit)
     // a zero-file micro-batch (every partitioned empty frame — an
@@ -1549,7 +1562,7 @@ object ManifestStore {
       else Some(Snapshot(0L,
         base.map(_.files).getOrElse(Seq.empty) ++ mine,
         txns ++ extraTxns + (appId -> batchId),
-        Some(mergedSchema(base, legacy, batchSchema)),
+        Some(mergedSchema(base, batchSchema)),
         partColsOf(base, partitionBy), op = "append",
         colMap = base.map(_.colMap).getOrElse(Map.empty),
         droppedPhys = base.map(_.droppedPhys).getOrElse(Nil),
@@ -1589,77 +1602,33 @@ object ManifestStore {
     * keep its type (nullability-insensitive, recursively — advice r9);
     * new columns are sanctioned widening (old files read as null), and a
     * batch may omit table columns (its files read as null there). The
-    * partition-column set is immutable per table. Returns the table
-    * schema footer-read from a LEGACY (pre-schema-line) manifest, so the
-    * commit loop can seed its schema union without re-reading footers per
-    * attempt.
+    * partition-column set is immutable per table.
     */
-  private def requireCompatibleSchema(spark: SparkSession, df: DataFrame,
-                                      root: String, partitionBy: Seq[String],
-                                      cur: Option[Snapshot]): Option[StructType] = {
-    val snapOpt = cur.filter(_.files.nonEmpty)
-    snapOpt match {
-      case None => None
-      case Some(snap) =>
-        require(snap.partCols == partitionBy,
-          s"append partitionBy=$partitionBy but the table under $root is " +
-            s"partitioned by ${snap.partCols} — the partition layout is fixed at creation")
-        val legacy = if (snap.schema.isEmpty)
-          Some(legacySchemaOf(spark, snap.files))
-        else None
-        val table = snap.schema.orElse(legacy).get
-        checkColumnTypes(normalizeSchema(df.schema), table, root)
-        // r14 column mapping: a widening append's NEW column takes its own
-        // name as its PHYSICAL name — colliding with a physical name in
-        // use (some column's pre-rename identity) or retired (dropped)
-        // would read the old files' orphaned bytes as the new column's
-        if (snap.colMap.nonEmpty || snap.droppedPhys.nonEmpty) {
-          val newCols = normalizeSchema(df.schema).fieldNames
-            .filterNot(table.fieldNames.contains)
-          val taken = snap.physicalNames
-          val bad = newCols.filter(taken)
-          require(bad.isEmpty,
-            s"new column(s) ${bad.mkString(", ")} collide with a PHYSICAL " +
-              s"column name in use or dropped under $root — old files " +
-              "already carry data under that name; choose a different name " +
-              "or rewrite the table")
-        }
-        legacy
+  private def requireCompatibleSchema(df: DataFrame, root: String,
+                                      partitionBy: Seq[String],
+                                      cur: Option[Snapshot]): Unit =
+    cur.filter(_.files.nonEmpty).foreach { snap =>
+      require(snap.partCols == partitionBy,
+        s"append partitionBy=$partitionBy but the table under $root is " +
+          s"partitioned by ${snap.partCols} — the partition layout is fixed at creation")
+      val table = tableSchemaOf(snap)
+      checkColumnTypes(normalizeSchema(df.schema), table, root)
+      // r14 column mapping: a widening append's NEW column takes its own
+      // name as its PHYSICAL name — colliding with a physical name in
+      // use (some column's pre-rename identity) or retired (dropped)
+      // would read the old files' orphaned bytes as the new column's
+      if (snap.colMap.nonEmpty || snap.droppedPhys.nonEmpty) {
+        val newCols = normalizeSchema(df.schema).fieldNames
+          .filterNot(table.fieldNames.contains)
+        val taken = snap.physicalNames
+        val bad = newCols.filter(taken)
+        require(bad.isEmpty,
+          s"new column(s) ${bad.mkString(", ")} collide with a PHYSICAL " +
+            s"column name in use or dropped under $root — old files " +
+            "already carry data under that name; choose a different name " +
+            "or rewrite the table")
+      }
     }
-  }
-
-  /** Schema of a LEGACY (pre-schema-line) snapshot: the UNION of every
-    * file's footer schema (parquet mergeSchema — a distributed footer-only
-    * pass), never `files.head`'s alone. On a mixed-footer pre-r10 table,
-    * head-only seeding would permanently drop the columns that live only
-    * in OTHER files once the seeded schema is committed as the table's —
-    * explicit-schema reads then hide that data forever (advice r10).
-    * Incompatible footers refuse loudly via Spark's merge failure, the
-    * same posture as the append-time type check. Content-addressed cache
-    * (keyed on the file-path set): the union is immutable per file set,
-    * and an idle tail-poll or a fully-pruned read of a legacy table must
-    * not pay a whole-table footer pass per call (review r11).
-    */
-  private val legacySchemaCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, StructType](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, StructType]): Boolean = size > 64
-    })
-
-  private def legacySchemaOf(spark: SparkSession, files: Seq[ManifestEntry]): StructType = {
-    val key = org.apache.commons.codec.digest.DigestUtils.md5Hex(
-      files.map(_.path).sorted.mkString("\n"))
-    // get → compute → putIfAbsent, NOT computeIfAbsent: the distributed
-    // footer pass must never run while holding the global cache lock, or
-    // concurrent readers of DIFFERENT legacy tables serialize behind one
-    // whole-table scan; the rare duplicate pass is the cheaper failure
-    // (advice r11)
-    Option(legacySchemaCache.get(key)).getOrElse {
-      val computed = normalizeSchema(
-        spark.read.option("mergeSchema", "true").parquet(files.map(_.path): _*).schema)
-      Option(legacySchemaCache.putIfAbsent(key, computed)).getOrElse(computed)
-    }
-  }
 
   private def checkColumnTypes(batch: StructType, table: StructType, root: String,
                                advice: String =
@@ -1693,16 +1662,14 @@ object ManifestStore {
     }
   }
 
-  /** Table schema for a commit built on `base`: base's schema (or the
-    * footer-read legacy schema) widened by the batch's new columns. Type
-    * conflicts on shared columns REFUSE here too — the pre-commit check
-    * ran against an older base, and two concurrent widenings introducing
-    * the same column with different types must not both land.
+  /** Table schema for a commit built on `base`: base's schema widened by
+    * the batch's new columns. Type conflicts on shared columns REFUSE
+    * here too — the pre-commit check ran against an older base, and two
+    * concurrent widenings introducing the same column with different
+    * types must not both land.
     */
-  private def mergedSchema(base: Option[Snapshot], legacy: Option[StructType],
-                           batch: StructType): StructType = {
-    val tbl = base.flatMap(_.schema).orElse(if (base.exists(_.files.nonEmpty)) legacy else None)
-    tbl match {
+  private def mergedSchema(base: Option[Snapshot], batch: StructType): StructType = {
+    base.flatMap(_.schema) match {
       case None => batch
       case Some(t) =>
         val byName = t.fields.map(f => f.name -> f.dataType).toMap
@@ -1932,7 +1899,7 @@ object ManifestStore {
     catch { case _: java.io.FileNotFoundException => return None }
     val key = (rootP.toString, v, st.getLen, st.getModificationTime)
     Option(recordCache.get(key)).orElse {
-      val rec = readManifestBytes(fs, rootP, v).flatMap(parse(_, v)).map {
+      val rec = parse(fs, rootP, v).map {
         case FullManifest(s) => CommitRecord(s.op, s.addedBytes, isDelta = false)
         case DeltaManifest(d) => CommitRecord(d.op, d.addedBytes, isDelta = true)
       }
@@ -1945,7 +1912,7 @@ object ManifestStore {
     * `fromVersion`, as (currentVersion, frame) — poll `latestSnapshot`,
     * call this with the last version you processed, checkpoint the
     * returned version. Sound over append-only ranges AND (r12) across
-    * PHYSICAL rewrites: a compaction/materialization/upgrade commit is
+    * PHYSICAL rewrites: a compaction/materialization commit is
     * op-labeled in the manifest and verified row-conserving, so the span
     * walk skips it — table maintenance no longer breaks tail consumers.
     * DATA-CHANGING rewrites (CoW delete/upsert, pre-r12 unlabeled
@@ -1981,7 +1948,7 @@ object ManifestStore {
     require(cur.version >= fromVersion,
       s"current version ${cur.version} is below fromVersion $fromVersion under $root — " +
         "the table was recreated; reprocess from a full snapshot")
-    val schema = cur.schema.getOrElse(legacySchemaOf(spark, cur.files))
+    val schema = tableSchemaOf(cur)
     def emptyFrame: DataFrame =
       spark.createDataFrame(new java.util.ArrayList[Row](), schema)
     if (cur.version == fromVersion) return emptyFrame
@@ -2098,7 +2065,7 @@ object ManifestStore {
     require(cur.version >= fromVersion,
       s"current version ${cur.version} is below fromVersion $fromVersion under $root — " +
         "the table was recreated; reprocess from a full snapshot")
-    val schema = cur.schema.getOrElse(legacySchemaOf(spark, cur.files))
+    val schema = tableSchemaOf(cur)
     Seq(ChangeTypeCol, CommitVersionCol).foreach(c =>
       require(!schema.fieldNames.contains(c),
         s"table schema collides with the reserved change column $c"))
@@ -2152,7 +2119,6 @@ object ManifestStore {
     val runAdded = new java.util.LinkedHashMap[String, (Long, ManifestEntry)]()
     def flushRun(): Unit = if (!runAdded.isEmpty) {
       val addedEntries = runAdded.values.asScala.map(_._2).toSeq
-      val stepSchema = stateSchema.getOrElse(legacySchemaOf(spark, stateFiles))
       val fileVersion: Map[String, Long] =
         runAdded.asScala.map { case (p, (v, _)) => p -> v }.toMap
       val bcast = spark.sparkContext.broadcast(fileVersion.map { case (p, v) =>
@@ -2164,8 +2130,7 @@ object ManifestStore {
         relationWith(spark, root,
           Snapshot(stateVersion, addedEntries, schema = stateSchema,
             partCols = statePartCols, tableId = stateTableId,
-            colMap = stateColMap, droppedPhys = stateDropped),
-          stepSchema, statePartCols))
+            colMap = stateColMap, droppedPhys = stateDropped)))
         .withColumn(ChangeTypeCol, lit("insert"))
         .withColumn(CommitVersionCol, versionCol)
       runAdded.clear()
@@ -2223,7 +2188,7 @@ object ManifestStore {
     }
     for (v <- (fromVersion + 1) to cur.version) {
       if (v == cur.version) stepFull(v, cur) // already resolved
-      else readManifestBytes(fs, rootP, v).flatMap(parse(_, v)) match {
+      else parse(fs, rootP, v) match {
         case None => () // torn/vacuumed interior: coarsen onto the next one
         case Some(DeltaManifest(d)) if d.base == stateVersion =>
           step(v, d.removed.filter(state.containsKey), d.entries, d.schema,
@@ -2259,7 +2224,7 @@ object ManifestStore {
     require(cur.version >= fromVersion,
       s"current version ${cur.version} is below fromVersion $fromVersion under $root — " +
         "the table was recreated; reprocess from a full snapshot")
-    val schema = cur.schema.getOrElse(legacySchemaOf(spark, cur.files))
+    val schema = tableSchemaOf(cur)
     require(!schema.fieldNames.contains(ChangeTypeCol),
       s"table schema collides with the reserved change column $ChangeTypeCol")
     def emptyChanges: DataFrame = spark.createDataFrame(
@@ -2287,7 +2252,6 @@ object ManifestStore {
     */
   private def changesStep(spark: SparkSession, root: String,
                           prev: Snapshot, next: Snapshot): Option[DataFrame] = {
-    val stepSchema = next.schema.getOrElse(legacySchemaOf(spark, next.files))
     val oldByPath = prev.files.map(f => f.path -> f).toMap
     val added = next.files.filterNot(f => oldByPath.contains(f.path))
     val dvGrew = next.files.filter(f => oldByPath.get(f.path).exists(o =>
@@ -2308,8 +2272,7 @@ object ManifestStore {
         f.path -> DvBitmap.diff(nw, oldBms.getOrElse(fk, emptyBm))
       }.toMap
       val deleted = spark.baseRelationToDataFrame(
-        relationWith(spark, root, next.copy(files = dvGrew), stepSchema,
-          next.partCols))
+        relationWith(spark, root, next.copy(files = dvGrew)))
         .where(dvPredicate(spark, diffs))
         .withColumn(ChangeTypeCol, lit("delete"))
       parts += deleted
@@ -2409,10 +2372,6 @@ object ManifestStore {
     // it replaced, provable from the manifest's own counts
     val prevPaths = prev.files.map(_.path).toSet
     val added = next.files.filterNot(f => prevPaths(f.path))
-    require(removed.forall(_.rows.isDefined) && added.forall(_.rows.isDefined),
-      s"physical rewrite v${next.version} under $root touches legacy " +
-        "stats-less entries — live-row conservation is unprovable; run " +
-        "upgradeTable first or reprocess from a full snapshot")
     val beforeRows = removed.map(liveRowsOf).sum
     val afterRows = added.map(liveRowsOf).sum
     require(beforeRows == afterRows,
@@ -2548,13 +2507,14 @@ object ManifestStore {
     if (dvE.isEmpty) df else df.where(!dvDeletedFilter(spark, dvE))
   }
 
-  /** The table schema of one snapshot, footer-derived for legacy
-    * (pre-schema-line) manifests — the streaming source's schema seam
-    * (column order is the library contract's: partition columns in
-    * place, exactly what [[readWhere]] frames carry).
+  /** The table schema of one snapshot (column order is the library
+    * contract's: partition columns in place, exactly what [[readWhere]]
+    * frames carry). The parser refuses a file-bearing manifest without a
+    * schema, so only a snapshot without files can lack one: it has no
+    * columns.
     */
-  private[graft] def tableSchemaOf(spark: SparkSession, snap: Snapshot): StructType =
-    snap.schema.getOrElse(legacySchemaOf(spark, snap.files))
+  private[graft] def tableSchemaOf(snap: Snapshot): StructType =
+    snap.schema.getOrElse(StructType(Nil))
 
   /** The `HadoopFsRelation` of one snapshot (shared by [[table]], the
     * library read path and the `graft-manifest` format). Does NOT apply
@@ -2568,9 +2528,7 @@ object ManifestStore {
     if (snap.files.isEmpty)
       throw new java.util.NoSuchElementException(
         s"manifest v${snap.version} under $root references no files")
-    relationWith(spark, root, snap,
-      snap.schema.getOrElse(legacySchemaOf(spark, snap.files)), snap.partCols,
-      applyDvInPlanner)
+    relationWith(spark, root, snap, applyDvInPlanner)
   }
 
   /** A SCHEMA-bearing ZERO-FILE relation for a catalog-registered table
@@ -2591,20 +2549,19 @@ object ManifestStore {
     partCols.foreach(c => require(schema.fieldNames.contains(c),
       s"partition column $c is not in the declared schema ${schema.catalogString}"))
     relationWith(spark, root,
-      Snapshot(0L, Seq.empty, schema = Some(schema), partCols = partCols),
-      schema, partCols)
+      Snapshot(0L, Seq.empty, schema = Some(schema), partCols = partCols))
   }
 
-  /** [[relationFor]] with the schema already resolved — the library read
-    * path passes the FULL snapshot's schema when scanning an entry SUBSET
-    * (a pruned or dv-split slice of a legacy table must not re-derive its
-    * schema from the subset's footers and lose columns).
+  /** [[relationFor]] without the no-files refusal — scans of an entry
+    * SUBSET (a pruned or dv-split slice) and the zero-file relation of a
+    * registered table go through here.
     */
   private def relationWith(spark: SparkSession, root: String, snap: Snapshot,
-                           schema: StructType, partCols: Seq[String],
                            applyDvInPlanner: Boolean = false)
       : org.apache.spark.sql.execution.datasources.HadoopFsRelation = {
     val (_, rootP) = fsFor(spark, root)
+    val schema = tableSchemaOf(snap)
+    val partCols = snap.partCols
     val partSchema = StructType(partCols.map(c => schema(c)))
     val dataSchema = StructType(
       schema.fields.filterNot(f => partCols.contains(f.name)))
@@ -2709,9 +2666,7 @@ object ManifestStore {
     val (fs, rootP) = fsFor(spark, root)
     val head = latestSnapshot(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed manifest under $root"))
-    val schema = head.schema.getOrElse(throw new IllegalStateException(
-      s"the table under $root records no schema (pre-r10 legacy) — run " +
-        "ManifestStore.upgradeTable first"))
+    val schema = tableSchemaOf(head)
     columns.foreach { c =>
       require(schema.fieldNames.contains(c),
         s"no column '$c' under $root (have ${schema.fieldNames.mkString(", ")})")
@@ -2792,8 +2747,12 @@ object ManifestStore {
     require(latestSnapshot(spark, root).isEmpty,
       s"$root already holds a committed manifest table — convert adopts " +
         "plain parquet directories only")
-    val inferred = spark.read.parquet(root)
-    val fullSchema = normalizeSchema(inferred.schema)
+    // the UNION of every footer, not one file's: Spark's default infers
+    // from a single footer, and committing that would hide the columns
+    // other files carry for good. Incompatible footers refuse through
+    // Spark's merge error
+    val fullSchema = normalizeSchema(
+      spark.read.option("mergeSchema", "true").parquet(root).schema)
     def leaves(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq.flatMap { st =>
       val n = st.getPath.getName
       if (n.startsWith("_") || n.startsWith(".")) Seq.empty
@@ -2845,7 +2804,7 @@ object ManifestStore {
       val (rows, stats) = harvested(st.getPath.toString)
       val part = if (partCols.isEmpty) None
         else Some(partitionOf(rootP, st.getPath, partCols))
-      ManifestEntry(st.getPath.toString, st.getLen, Some(rows), stats, part)
+      ManifestEntry(st.getPath.toString, st.getLen, rows, stats, part)
     }
     commitWithRebase(fs, rootP, maxRetries, tornGraceMs) { base =>
       require(base.isEmpty,
@@ -2916,9 +2875,7 @@ object ManifestStore {
     if (snap.files.isEmpty)
       throw new java.util.NoSuchElementException(
         s"manifest v${snap.version} under $root references no files")
-    // the FULL snapshot's schema, never a subset's footers: a pruned or
-    // dv-split slice of a legacy table must not lose columns
-    val schema = snap.schema.getOrElse(legacySchemaOf(spark, snap.files))
+    val schema = tableSchemaOf(snap)
     if (keepIdentity) require(
       !schema.fieldNames.contains(FkeyCol) && !schema.fieldNames.contains(PosCol),
       s"table schema collides with reserved internal columns $FkeyCol/$PosCol")
@@ -2938,7 +2895,7 @@ object ManifestStore {
       .withColumn(PosCol, col("_metadata.row_index"))
     def scanOf(es: Seq[ManifestEntry]): DataFrame = {
       val df = spark.baseRelationToDataFrame(
-        relationWith(spark, root, snap.copy(files = es), schema, snap.partCols))
+        relationWith(spark, root, snap.copy(files = es)))
       if (keepIdentity) withIdentity(df) else df
     }
     val base: DataFrame =
@@ -3037,9 +2994,9 @@ object ManifestStore {
     * Dotted attribute names ALWAYS address nested struct fields
     * (`meta.k`) — the parquet/Spark pushdown convention; flat columns
     * with literal dots are refused at the write, so the resolution is
-    * unambiguous on any table this store wrote (a legacy dotted flat
-    * column surfaces as a loud unresolvable-column error here, never a
-    * silent wrong-column match).
+    * unambiguous on any table this store wrote (a dotted flat column
+    * adopted by CONVERT TO MANIFEST surfaces as a loud unresolvable-column
+    * error here, never a silent wrong-column match).
     */
   private def filterColumn(f: Filter): Column = {
     def c(n: String) = {
@@ -3120,28 +3077,18 @@ object ManifestStore {
     // read ONLY the touched files (snapshot copy), keep the non-matching
     // rows; NULL comparisons don't match the delete predicate, so they
     // survive — the SQL DELETE semantics
-    val touchedRows = readSnapshot(spark, root, before.copy(files = touched), Seq.empty)
-    val surviving = touchedRows.where(!coalesce(matchPred, lit(false)))
-    // the deleted count comes from MANIFEST metadata when every touched
-    // entry carries its row count (sum of LIVE rows — physical minus the
-    // deletion vector's — minus sum(rewritten), zero extra scans of a
-    // 100 TB slice); only legacy stats-less entries pay a counting scan.
-    // The metadata path writes before it knows the count — a no-match
-    // delete orphans its rewrite directory (vacuum food, same as an
-    // abandoned compaction) instead of pre-scanning every delete.
-    val touchedTotal = if (touched.forall(_.rows.isDefined))
-      Some(touched.map(liveRowsOf).sum) else None
-    val matched = touchedTotal match {
-      case Some(_) => -1L // derived from the rewrite below
-      case None => touchedRows.where(coalesce(matchPred, lit(false))).count()
-    }
-    if (touchedTotal.isEmpty && matched == 0L)
-      return (0L, 0, before.version) // nothing matched: no-op, nothing written
+    val surviving = readSnapshot(spark, root, before.copy(files = touched), Seq.empty)
+      .where(!coalesce(matchPred, lit(false)))
+    // the deleted count comes from MANIFEST metadata: the touched entries'
+    // LIVE rows (physical minus the deletion vector's) minus the rewrite's,
+    // zero extra scans of a 100 TB slice. The rewrite runs before the
+    // count is known — a no-match delete orphans its rewrite directory
+    // (vacuum food, same as an abandoned compaction) instead of
+    // pre-scanning every delete.
     val mine = writeBatch(fs, rootP, surviving, before.partCols,
       internalRewrite = true, colMap = before.colMap)
-    val deleted = touchedTotal
-      .map(_ - mine.flatMap(_.rows).sum).getOrElse(matched)
-    if (deleted == 0L) return (0L, 0, before.version) // metadata path no-match
+    val deleted = touched.map(liveRowsOf).sum - mine.map(_.rows).sum
+    if (deleted == 0L) return (0L, 0, before.version) // nothing matched
     val v = commitReplacing(fs, rootP, dvSignature(touched), mine, before,
       maxRetries, tornGraceMs, refuseEmpty = true, op = "delete")
     if (v == -1L) (0L, 0, -1L) // abandoned: NOTHING was deleted
@@ -3150,7 +3097,7 @@ object ManifestStore {
 
   /** An entry's LIVE row count: physical rows minus its deletion vector's. */
   private def liveRowsOf(e: ManifestEntry): Long =
-    e.rows.getOrElse(0L) - e.dv.map(_.rows).getOrElse(0L)
+    e.rows - e.dv.map(_.rows).getOrElse(0L)
 
   private val ReplaceWhereTag = "[graft replaceWhere]"
 
@@ -3192,9 +3139,7 @@ object ManifestStore {
     val (fs, rootP) = fsFor(spark, root)
     val before = latestSnapshot(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed manifest under $root"))
-    val schema = before.schema.getOrElse(throw new IllegalStateException(
-      s"the table under $root records no schema (pre-r10 legacy) — run " +
-        "ManifestStore.upgradeTable first"))
+    val schema = tableSchemaOf(before)
     require(normalizeSchema(df.schema).fieldNames.sorted.toSeq ==
       schema.fieldNames.sorted.toSeq,
       s"replaceWhere batch columns ${df.columns.sorted.mkString(", ")} must " +
@@ -3226,21 +3171,16 @@ object ManifestStore {
     val mine = writeBatch(fs, rootP, guarded, before.partCols,
       colMap = before.colMap, constraints = before.constraints)
     // rewrite the touched slice without its matching rows (deleteFrom's
-    // metadata-counted shape: zero extra scans when stats carry rows)
+    // metadata-counted shape: zero extra scans)
     val touched = prunedEntries(before, pruning)
     val (survivors, replaced) =
       if (touched.isEmpty) (Seq.empty[ManifestEntry], 0L)
       else {
-        val touchedRows = readSnapshot(spark, root,
-          before.copy(files = touched), Seq.empty)
-        val surviving = touchedRows.where(!coalesce(cond, lit(false)))
+        val surviving = readSnapshot(spark, root,
+          before.copy(files = touched), Seq.empty).where(!coalesce(cond, lit(false)))
         val sEntries = writeBatch(fs, rootP, surviving, before.partCols,
           internalRewrite = true, colMap = before.colMap)
-        val total = if (touched.forall(_.rows.isDefined))
-          Some(touched.map(liveRowsOf).sum) else None
-        val n = total.map(_ - sEntries.flatMap(_.rows).sum)
-          .getOrElse(touchedRows.where(coalesce(cond, lit(false))).count())
-        (sEntries, n)
+        (sEntries, touched.map(liveRowsOf).sum - sEntries.map(_.rows).sum)
       }
     if (replaced == 0L) {
       // nothing matched: the batch still lands, but as a pure addition —
@@ -3278,9 +3218,7 @@ object ManifestStore {
       s"the table under $root is unpartitioned — INSERT OVERWRITE means " +
         "dynamic PARTITION overwrite; use replaceWhere (overwriteWhere) " +
         "for a predicate-scoped swap on an unpartitioned table")
-    val schema = before.schema.getOrElse(throw new IllegalStateException(
-      s"the table under $root records no schema (pre-r10 legacy) — run " +
-        "ManifestStore.upgradeTable first"))
+    val schema = tableSchemaOf(before)
     require(normalizeSchema(df.schema).fieldNames.sorted.toSeq ==
       schema.fieldNames.sorted.toSeq,
       s"overwrite batch columns ${df.columns.sorted.mkString(", ")} must " +
@@ -3450,9 +3388,6 @@ object ManifestStore {
     val (fs, rootP) = fsFor(spark, root)
     val touched = prunedEntries(before, pruning)
     if (touched.isEmpty) return (0L, 0, before.version)
-    require(touched.forall(_.rows.isDefined),
-      s"deleteWhereMergeOnRead needs per-file row counts under $root — run " +
-        "upgradeTable first (legacy stats-less entries cannot carry exact dv counts)")
     // LIVE rows of the touched slice, with per-row file identity; existing
     // vectors are already applied by the scan, so new positions are
     // disjoint from old ones and per-file counts are exact
@@ -3486,11 +3421,8 @@ object ManifestStore {
                                    maxRetries: Int = 10,
                                    tornGraceMs: Long = 60000L): (Long, Int, Long) = {
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
-    require(before.files.forall(_.rows.isDefined),
-      s"UPDATE (merge-on-read) needs per-file row counts under $root — run " +
-        "upgradeTable first")
     val (fs, rootP) = fsFor(spark, root)
-    val table = before.schema.getOrElse(legacySchemaOf(spark, before.files))
+    val table = tableSchemaOf(before)
     set.keys.foreach(k => require(table.fieldNames.contains(k),
       s"UPDATE SET column $k is not a column of the table under $root"))
     val touched = prunedEntries(before, pruning)
@@ -3513,9 +3445,8 @@ object ManifestStore {
         val mineUpdates = writeBatch(fs, rootP, updated, before.partCols,
           internalRewrite = true, colMap = before.colMap,
           constraints = before.constraints) // SET values are NEW — enforce
-        val seeded = before.copy(schema = before.schema.orElse(Some(table)))
         val v = commitReplacing(fs, rootP, replacedSig, tagged ++ mineUpdates,
-          seeded, maxRetries, tornGraceMs, refuseEmpty = false,
+          before, maxRetries, tornGraceMs, refuseEmpty = false,
           op = "mor-update")
         if (v == -1L) (0L, 0, -1L) else (nUpdated, tagged.size, v)
     }
@@ -3584,7 +3515,7 @@ object ManifestStore {
     val originals = touched.filter(e => newCounts.contains(fkeyOf(e)))
     val tagged = originals.map { e =>
       val fk = fkeyOf(e)
-      require(totals(fk) <= e.rows.getOrElse(Long.MaxValue),
+      require(totals(fk) <= e.rows,
         s"dv positions (${totals(fk)}) exceed physical rows for ${e.path}")
       e.copy(dv = Some(DvRef(fileOf(fk), totals(fk))))
     }
@@ -3621,7 +3552,7 @@ object ManifestStore {
       throw new java.util.NoSuchElementException(s"no committed manifest under $root"))
     val dvE = before.files.filter(e => e.dv.exists(_.rows > 0) &&
       (minDvFraction == 0.0 ||
-        e.rows.exists(r => r > 0 && e.dv.get.rows.toDouble / r >= minDvFraction)))
+        (e.rows > 0 && e.dv.get.rows.toDouble / e.rows >= minDvFraction)))
     if (dvE.isEmpty) return (0, before.version)
     val (fs, rootP) = fsFor(spark, root)
     val raw = writeBatch(fs, rootP,
@@ -3629,7 +3560,7 @@ object ManifestStore {
       before.partCols, internalRewrite = true, colMap = before.colMap)
     val rewriting = dvE.map(_.path).toSet
     val cleanRemainder = before.files.exists(e => !rewriting(e.path))
-    val nonZero = raw.filterNot(_.rows.contains(0L))
+    val nonZero = raw.filterNot(_.rows == 0L)
     // zero-row rewrite files are dead weight UNLESS they are all that
     // keeps a fully-wiped table readable (review r11)
     val mine = if (nonZero.nonEmpty || cleanRemainder) nonZero else raw
@@ -3688,13 +3619,13 @@ object ManifestStore {
     }
 
   /** Everything [[upsertFrom]] and [[upsertMorFrom]] share: validation,
-    * the one-pass audit, probe-key pruning, the seeded snapshot and the
-    * updates batch write. Left = the operation already completed (empty
-    * updates, or a pure insert with no candidate file — committed here);
-    * Right = the matched-key tail remains.
+    * the one-pass audit, probe-key pruning and the updates batch write.
+    * Left = the operation already completed (empty updates, or a pure
+    * insert with no candidate file — committed here); Right = the
+    * matched-key tail remains.
     */
   private final case class UpsertPrep(upd: StructType, keyRows: Array[Row],
-                                      touched: Seq[ManifestEntry], seeded: Snapshot,
+                                      touched: Seq[ManifestEntry],
                                       mineUpdates: Seq[ManifestEntry])
 
   private def prepareUpsert(spark: SparkSession, root: String,
@@ -3706,7 +3637,7 @@ object ManifestStore {
       : Either[(Long, Int, Long), UpsertPrep] = {
     require(keyCols.nonEmpty, "upsertByKey needs at least one key column")
     val (fs, rootP) = fsFor(spark, root)
-    val table = before.schema.getOrElse(legacySchemaOf(spark, before.files))
+    val table = tableSchemaOf(before)
     val upd = normalizeSchema(updates.schema)
     val tableCols = table.fields.map(_.name).toSet
     val newCols = upd.fields.map(_.name).filterNot(tableCols)
@@ -3806,20 +3737,16 @@ object ManifestStore {
         }
         prunedEntries(before, perCol)
       }
-    // a legacy (schema-less) manifest gets the derived schema SEEDED into
-    // the commit: updates may omit columns, and a schema-less mixed-footer
-    // table would drop them nondeterministically on read (review r10)
-    val seeded = before.copy(schema = before.schema.orElse(Some(table)))
     val mineUpdates = writeBatch(fs, rootP, updates, before.partCols,
       colMap = before.colMap, constraints = before.constraints)
     if (touched.isEmpty) {
       // pure insert: no existing file can hold a matching key
-      val v = commitReplacing(fs, rootP, Map.empty, mineUpdates, seeded,
+      val v = commitReplacing(fs, rootP, Map.empty, mineUpdates, before,
         maxRetries, tornGraceMs, refuseEmpty = false, op = "upsert",
         txn = txn, extraTxns = extraTxns)
       return Left((0L, 0, v))
     }
-    Right(UpsertPrep(upd, keyRows, touched, seeded, mineUpdates))
+    Right(UpsertPrep(upd, keyRows, touched, mineUpdates))
   }
 
   /** The exact key-tuple side of the match (the pruning above is only a
@@ -3844,25 +3771,21 @@ object ManifestStore {
                             keyCols: Seq[String], maxProbeKeys: Int,
                             maxRetries: Int, tornGraceMs: Long,
                             p: UpsertPrep,
-                            txn: Option[(String, Long)] = None,
-                            extraTxns: Map[String, Long] = Map.empty): (Long, Int, Long) = {
+                            txn: Option[(String, Long)],
+                            extraTxns: Map[String, Long]): (Long, Int, Long) = {
     val (fs, rootP) = fsFor(spark, root)
-    val touchedRows = readSnapshot(spark, root, before.copy(files = p.touched), Seq.empty)
     val keysSide = upsertKeysSide(spark, updates, keyCols, maxProbeKeys, p)
-    val surviving = touchedRows.join(keysSide, keyCols, "left_anti")
+    val surviving = readSnapshot(spark, root, before.copy(files = p.touched), Seq.empty)
+      .join(keysSide, keyCols, "left_anti")
     // zero-row rewrite files (a fully-replaced unpartitioned slice leaves
     // a schema-only part file) are dead weight here — mineUpdates already
     // keeps the manifest non-empty
     val mineRewrite = writeBatch(fs, rootP, surviving, before.partCols,
         internalRewrite = true, colMap = before.colMap)
-      .filterNot(_.rows.contains(0L))
-    val touchedTotal = if (p.touched.forall(_.rows.isDefined))
-      Some(p.touched.map(liveRowsOf).sum) else None
-    val replaced = touchedTotal
-      .map(_ - mineRewrite.flatMap(_.rows).sum)
-      .getOrElse(touchedRows.count() - surviving.count())
+      .filterNot(_.rows == 0L)
+    val replaced = p.touched.map(liveRowsOf).sum - mineRewrite.map(_.rows).sum
     val v = commitReplacing(fs, rootP, dvSignature(p.touched),
-      mineRewrite ++ p.mineUpdates, p.seeded, maxRetries, tornGraceMs,
+      mineRewrite ++ p.mineUpdates, before, maxRetries, tornGraceMs,
       refuseEmpty = true, op = "upsert", txn = txn, extraTxns = extraTxns)
     if (v == -1L) (0L, 0, -1L) else (replaced, p.touched.size, v)
   }
@@ -3899,13 +3822,7 @@ object ManifestStore {
                                    before: Snapshot, updates: DataFrame,
                                    keyCols: Seq[String], maxProbeKeys: Int = 10000,
                                    maxRetries: Int = 10,
-                                   tornGraceMs: Long = 60000L): (Long, Int, Long) = {
-    // BEFORE any work: prepareUpsert writes the whole updates batch, and a
-    // stats-less legacy table would orphan that write on every retry
-    // (review r11)
-    require(before.files.forall(_.rows.isDefined),
-      s"upsertByKeyMergeOnRead needs per-file row counts under $root — run " +
-        "upgradeTable first (dv counts need physical rows)")
+                                   tornGraceMs: Long = 60000L): (Long, Int, Long) =
     prepareUpsert(spark, root, before, updates, keyCols, maxProbeKeys,
       maxRetries, tornGraceMs) match {
       case Left(done) => done
@@ -3922,17 +3839,16 @@ object ManifestStore {
         writeDvAndTag(spark, rootP, root, p.touched, del) match {
           case None => // no existing row matched: a pure insert after all
             val v = commitReplacing(fs, rootP, Map.empty, p.mineUpdates,
-              p.seeded, maxRetries, tornGraceMs, refuseEmpty = false,
+              before, maxRetries, tornGraceMs, refuseEmpty = false,
               op = "mor-upsert")
             (0L, 0, v)
           case Some((tagged, replacedSig, replaced)) =>
             val v = commitReplacing(fs, rootP, replacedSig,
-              tagged ++ p.mineUpdates, p.seeded, maxRetries, tornGraceMs,
+              tagged ++ p.mineUpdates, before, maxRetries, tornGraceMs,
               refuseEmpty = false, op = "mor-upsert")
             if (v == -1L) (0L, 0, -1L) else (replaced, tagged.size, v)
         }
     }
-  }
 
   /** CDC APPLY (r13): ONE merge-on-read commit that both REPLACES
     * `upserts`' keys' rows and REMOVES `deleteKeys`' rows — the
@@ -3960,11 +3876,8 @@ object ManifestStore {
     require(keyCols.nonEmpty, "applyByKeyMergeOnRead needs at least one key column")
     val before = latestSnapshot(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed manifest under $root"))
-    require(before.files.forall(_.rows.isDefined),
-      s"applyByKeyMergeOnRead needs per-file row counts under $root — run " +
-        "upgradeTable first")
     val (fs, rootP) = fsFor(spark, root)
-    val table = before.schema.getOrElse(legacySchemaOf(spark, before.files))
+    val table = tableSchemaOf(before)
     val upd = normalizeSchema(upserts.schema)
     val tableCols = table.fields.map(_.name).toSet
     val newCols = upd.fields.map(_.name).filterNot(tableCols)
@@ -4007,14 +3920,13 @@ object ManifestStore {
       else prunedEntries(before, keyCols.zipWithIndex.map { case (c, i) =>
         In(c, keyRows.map(_.get(i)).distinct)
       })
-    val seeded = before.copy(schema = before.schema.orElse(Some(table)))
     val mineUpdates =
       if (updCount == 0L) Seq.empty
       else writeBatch(fs, rootP, upserts, before.partCols, colMap = before.colMap,
         constraints = before.constraints)
     if (touched.isEmpty) { // nothing to remove: a pure insert
       if (mineUpdates.isEmpty) return (0L, 0, before.version) // full no-op
-      val v = commitReplacing(fs, rootP, Map.empty, mineUpdates, seeded,
+      val v = commitReplacing(fs, rootP, Map.empty, mineUpdates, before,
         maxRetries, tornGraceMs, refuseEmpty = false, op = "mor-upsert",
         txn = txn, extraTxns = extraTxns)
       return (0L, 0, v)
@@ -4034,13 +3946,13 @@ object ManifestStore {
     writeDvAndTag(spark, rootP, root, touched, del) match {
       case None => // no existing row matched any key: a pure insert
         if (mineUpdates.isEmpty) return (0L, 0, before.version) // full no-op
-        val v = commitReplacing(fs, rootP, Map.empty, mineUpdates, seeded,
+        val v = commitReplacing(fs, rootP, Map.empty, mineUpdates, before,
           maxRetries, tornGraceMs, refuseEmpty = false, op = "mor-upsert",
           txn = txn, extraTxns = extraTxns)
         (0L, 0, v)
       case Some((tagged, replacedSig, removed)) =>
         val v = commitReplacing(fs, rootP, replacedSig, tagged ++ mineUpdates,
-          seeded, maxRetries, tornGraceMs, refuseEmpty = false,
+          before, maxRetries, tornGraceMs, refuseEmpty = false,
           op = "mor-upsert", txn = txn, extraTxns = extraTxns)
         if (v == -1L) (0L, 0, -1L) else (removed, tagged.size, v)
     }
@@ -4152,9 +4064,7 @@ object ManifestStore {
     commitWithRebase(fs, rootP, maxRetries, tornGraceMs) { baseOpt =>
       val base = baseOpt.getOrElse(throw new java.util.NoSuchElementException(
         s"no committed manifest under $root"))
-      val schema = base.schema.getOrElse(throw new IllegalStateException(
-        s"the table under $root records no schema (pre-r10 legacy) — run " +
-          "ManifestStore.upgradeTable first"))
+      val schema = tableSchemaOf(base)
       val dup = fields.map(_.name).filter(schema.fieldNames.contains)
       require(dup.isEmpty, s"column(s) ${dup.mkString(", ")} already exist under $root")
       val taken = base.physicalNames
@@ -4242,8 +4152,7 @@ object ManifestStore {
     * `newName`, the logical→physical map re-points it at the column's
     * unchanged physical name. Old versions time-travel with their own
     * names; pushed filters, stats pruning and partition lookup all map
-    * through the snapshot. Refuses on schema-less legacy tables (run
-    * [[upgradeTable]] first). Renaming a partition column is allowed —
+    * through the snapshot. Renaming a partition column is allowed —
     * the hive directory layout keeps the physical name, which the
     * manifest (never directory parsing) resolves.
     */
@@ -4256,9 +4165,7 @@ object ManifestStore {
     commitWithRebase(fs, rootP, maxRetries, tornGraceMs) { baseOpt =>
       val base = baseOpt.getOrElse(throw new java.util.NoSuchElementException(
         s"no committed manifest under $root"))
-      val schema = base.schema.getOrElse(throw new IllegalStateException(
-        s"the table under $root records no schema (pre-r10 legacy) — run " +
-          "ManifestStore.upgradeTable first"))
+      val schema = tableSchemaOf(base)
       require(schema.fieldNames.contains(oldName),
         s"no column '$oldName' under $root (have ${schema.fieldNames.mkString(", ")})")
       require(!schema.fieldNames.contains(newName),
@@ -4304,9 +4211,7 @@ object ManifestStore {
     commitWithRebase(fs, rootP, maxRetries, tornGraceMs) { baseOpt =>
       val base = baseOpt.getOrElse(throw new java.util.NoSuchElementException(
         s"no committed manifest under $root"))
-      val schema = base.schema.getOrElse(throw new IllegalStateException(
-        s"the table under $root records no schema (pre-r10 legacy) — run " +
-          "ManifestStore.upgradeTable first"))
+      val schema = tableSchemaOf(base)
       require(schema.fieldNames.contains(name),
         s"no column '$name' under $root (have ${schema.fieldNames.mkString(", ")})")
       require(!base.partCols.contains(name),
@@ -4367,9 +4272,7 @@ object ManifestStore {
     commitWithRebase(fs, rootP, maxRetries, tornGraceMs) { baseOpt =>
       val base = baseOpt.getOrElse(throw new java.util.NoSuchElementException(
         s"no committed manifest under $root"))
-      val schema = base.schema.getOrElse(throw new IllegalStateException(
-        s"the table under $root records no schema (pre-r10 legacy) — run " +
-          "ManifestStore.upgradeTable first"))
+      val schema = tableSchemaOf(base)
       val field = schema.fields.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(
           s"no column '$name' under $root (have ${schema.fieldNames.mkString(", ")})"))
@@ -4491,7 +4394,7 @@ object ManifestStore {
     val (fs, rootP) = fsFor(spark, root)
     val pre = latestSnapshot(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed manifest under $root"))
-    val table = tableSchemaOf(spark, pre)
+    val table = tableSchemaOf(pre)
     referenced.foreach(a => require(table.fieldNames.exists(_.equalsIgnoreCase(a)),
       s"constraint ${c.name} references column '$a', which is not in the " +
         s"table under $root (have ${table.fieldNames.mkString(", ")})"))
@@ -4581,51 +4484,6 @@ object ManifestStore {
     } match {
       case -1L => latestSnapshot(spark, root).map(_.version).getOrElse(0L)
       case v => v
-    }
-  }
-
-  /** Retrofit r10 metadata onto a PRE-r10 table without touching a data
-    * byte: harvest footer stats for every live file that lacks them,
-    * footer-derive the schema when the manifest carries none, and commit
-    * an enriched manifest version. Idempotent (a fully-enriched table is
-    * a no-op returning the current version); concurrent appends rebase in
-    * with their own entries untouched. After this, [[readWhere]] skips on
-    * the old files too — without it a legacy table never prunes.
-    */
-  def upgradeTable(spark: SparkSession, root: String,
-                   maxRetries: Int = 10, tornGraceMs: Long = 60000L): Long = {
-    val (fs, rootP) = fsFor(spark, root)
-    val snap = latestSnapshot(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed manifest under $root"))
-    if (snap.files.isEmpty ||
-        (snap.schema.isDefined && snap.files.forall(f => f.rows.isDefined)))
-      return snap.version
-    val schema = snap.schema.getOrElse(legacySchemaOf(spark, snap.files))
-    val dataSchema = StructType(
-      schema.fields.filterNot(f => snap.partCols.contains(f.name)))
-    val missing = snap.files.filter(_.rows.isEmpty)
-    // the physical-type check inside the harvest keeps a type-divergent
-    // legacy column conservative: a chunk written under a different Spark
-    // type records NO stats (never a reinterpreted bound), so skipping
-    // stays off for it while the divergence surfaces loudly at scan time
-    val harvested = harvestStats(
-      new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration),
-      missing.map(e => new Path(e.path)), dataSchema)
-    val enriched: Map[String, ManifestEntry] = missing.map { e =>
-      val (rows, stats) = harvested(new Path(e.path).toString)
-      e.path -> e.copy(rows = Some(rows), stats = stats)
-    }.toMap
-    commitWithRebase(fs, rootP, maxRetries, tornGraceMs) { base =>
-      val baseFiles = base.map(_.files).getOrElse(Seq.empty)
-      Some(Snapshot(0L,
-        baseFiles.map(f => if (f.rows.isEmpty) enriched.getOrElse(f.path, f) else f),
-        base.map(_.txns).getOrElse(Map.empty),
-        base.flatMap(_.schema).orElse(Some(schema)),
-        base.map(_.partCols).getOrElse(snap.partCols), op = "upgrade",
-        colMap = base.map(_.colMap).getOrElse(Map.empty),
-        droppedPhys = base.map(_.droppedPhys).getOrElse(Nil),
-        constraints = base.map(_.constraints).getOrElse(Nil),
-        properties = base.map(_.properties).getOrElse(Map.empty)))
     }
   }
 
@@ -4742,10 +4600,9 @@ object ManifestStore {
     * its appends/deletes/upserts/compactions write under ITS root and
     * re-point ITS manifest only; its [[vacuum]] lists only the clone's
     * own `data/` tree, so foreign (source-owned) batch directories are
-    * structurally untouchable. The clone materializes the source's
-    * SCHEMA explicitly (a legacy source's footer-derived union), keeps
-    * its partition columns, mints a FRESH table identity and starts at
-    * version 1 with empty txn watermarks — checkpointed consumers of the
+    * structurally untouchable. The clone carries the source's schema,
+    * keeps its partition columns, mints a FRESH table identity and starts
+    * at version 1 with empty txn watermarks — checkpointed consumers of the
     * source must not resume against it, and vice versa.
     *
     * The Delta caveat, stated: the SOURCE's vacuum knows nothing about
@@ -4764,13 +4621,12 @@ object ManifestStore {
     require(latestSnapshot(spark, dstRoot).isEmpty,
       s"refusing to clone onto $dstRoot — it already holds a committed " +
         "table (clones create tables, they never merge into one)")
-    val schema = tableSchemaOf(spark, snap)
     val (fs, dstP) = fsFor(spark, dstRoot)
     commitWithRebase(fs, dstP, maxRetries, tornGraceMs) { base =>
       require(base.isEmpty,
         s"a table appeared at $dstRoot concurrently — refusing to clone " +
           "onto it")
-      Some(Snapshot(0L, snap.files, Map.empty, Some(schema), snap.partCols,
+      Some(Snapshot(0L, snap.files, Map.empty, snap.schema, snap.partCols,
         op = "clone", colMap = snap.colMap, droppedPhys = snap.droppedPhys,
         constraints = snap.constraints, properties = snap.properties))
     }

@@ -108,13 +108,16 @@ class ManifestDeltaSpec extends SparkSpec {
   test("a v1 table upgrades in place: new commits stack v2 deltas on the " +
     "v1 base and the union reads exactly") {
     val root = freshRoot()
-    // hand-craft a v1 manifest over a real parquet batch (the o12 shape)
-    batch(0, 20).coalesce(1).write.parquet(s"$root/data/batch-legacy")
+    // hand-craft a v1 manifest over a real parquet batch in the r10–r12
+    // shape: a schema line and per-file row counts
+    batch(0, 20).coalesce(1).write.parquet(s"$root/data/batch-v1")
     val f = fs(root)
-    val part = f.listStatus(new Path(s"$root/data/batch-legacy"))
+    val part = f.listStatus(new Path(s"$root/data/batch-v1"))
       .map(_.getPath).find(_.getName.endsWith(".parquet")).get
     val len = f.getFileStatus(part).getLen
-    val body = s"graft-manifest v1\nversion=1\n${part.toString}\t$len\n"
+    val schema = spark.read.parquet(part.toString).schema.json
+    val body = s"graft-manifest v1\nversion=1\nschema=$schema\n" +
+      s"${part.toString}\t$len\t{\"r\":20}\n"
     val sum = org.apache.commons.codec.digest.DigestUtils.md5Hex(
       body.getBytes("UTF-8"))
     f.mkdirs(new Path(s"$root/_manifests"))

@@ -338,7 +338,7 @@ class ManifestStoreSpec extends SparkSpec {
       batch(0, 400).repartitionByRange(8, col("id")).sortWithinPartitions("id"), root)
     val snap = ManifestStore.latestSnapshot(spark, root).get
     assert(snap.files.size >= 8)
-    assert(snap.files.forall(_.rows.exists(_ > 0)), "every entry carries its row count")
+    assert(snap.files.forall(_.rows > 0), "every entry carries its row count")
     assert(snap.files.forall(e => e.stats.contains("id") && e.stats.contains("payload")),
       "long and string columns both carry footer stats")
 
@@ -868,48 +868,86 @@ class ManifestStoreSpec extends SparkSpec {
     assert(tail.columns.contains("extra"))
   }
 
-  /** r10: pre-r10 tables (no schema line, no per-file meta) never skip —
-    * upgradeTable retrofits footer stats + a schema without touching a
-    * data byte, after which readWhere prunes. Idempotent.
+  /** A pre-r10 table (no schema line, no per-file row counts) is refused
+    * at manifest parse, by every path that resolves the version. It is
+    * never read as a torn slot: that would serve an older version or an
+    * empty table, and let vacuum treat the table's files as unreferenced.
+    * The same refusal covers a schema-bearing manifest whose entry meta
+    * lacks its row count or does not parse.
     */
-  test("upgradeTable retrofits stats and schema onto a legacy manifest") {
+  test("pre-r10 manifests are refused at parse by every resolver, vacuum and history") {
     import org.apache.spark.sql.sources._
+    val fs = new Path(freshRoot()).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def writeManifest(root: String, v: Long, body: String): Unit = {
+      val sum = org.apache.commons.codec.digest.DigestUtils.md5Hex(body.getBytes("UTF-8"))
+      fs.mkdirs(new Path(s"$root/_manifests"))
+      val out = fs.create(new Path(s"$root/_manifests/v${"%020d".format(v)}.manifest"), true)
+      out.write((body + s"checksum=$sum\n").getBytes("UTF-8")); out.close()
+    }
+    def dataFiles(root: String): Set[String] = {
+      val it = fs.listFiles(new Path(s"$root/data"), true)
+      val b = Set.newBuilder[String]
+      while (it.hasNext) b += it.next().getPath.toString
+      b.result()
+    }
+    def refused(root: String, v: Long)(op: => Any): Unit = {
+      val t = try { op; fail(s"v$v under $root was read instead of refused") }
+        catch { case t: Throwable => t }
+      val e = Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case e: ManifestStore.PreR10ManifestException => e }
+        .getOrElse(throw t)
+      assert(e.getMessage.contains(s"manifest v$v under") &&
+        e.getMessage.contains(new Path(root).getName) &&
+        e.getMessage.contains("convertParquet"), e.getMessage)
+    }
+    def refusedEverywhere(root: String, v: Long): Unit = {
+      val before = dataFiles(root)
+      refused(root, v)(ManifestStore.latestSnapshot(spark, root))
+      refused(root, v)(ManifestStore.latestSnapshotUnhinted(spark, root))
+      refused(root, v)(ManifestStore.read(spark, root).count())
+      refused(root, v)(ManifestStore.readVersion(spark, root, v).count())
+      refused(root, v)(ManifestStore.append(spark, batch(900, 910), root))
+      refused(root, v)(ManifestStore.deleteWhereMergeOnRead(spark, root,
+        Seq(EqualTo("id", 1L))))
+      refused(root, v)(ManifestStore.readChangesSince(spark, root, 0L))
+      refused(root, v) {
+        try {
+          spark.sql(s"CREATE TABLE graft_pre_r10 USING `graft-manifest` OPTIONS (path '$root')")
+          spark.sql("SELECT count(*) FROM graft_pre_r10").collect()
+        } finally spark.sql("DROP TABLE IF EXISTS graft_pre_r10")
+      }
+      refused(root, v)(ManifestStore.history(spark, root).collect())
+      refused(root, v)(ManifestStore.vacuum(spark, root, keepVersions = 1, minAgeMs = 0L))
+      assert(dataFiles(root) == before, "a refused table must lose no file to vacuum")
+      assert(!fs.exists(new Path(s"$root/_manifests/v${"%020d".format(v + 1)}.manifest")),
+        "nothing may commit on top of a refused version")
+    }
+
+    // the pre-r10 shape: a v1 manifest with bare path\tbytes lines, no schema
     val root = freshRoot()
-    // hand-craft a LEGACY (pre-r10) table: parquet batch + a v1 manifest
-    // with bare path\tbytes lines and no schema
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    batch(0, 200).repartitionByRange(8, col("id")).sortWithinPartitions("id")
-      .write.parquet(s"$root/data/batch-legacy")
-    val files = fs.listStatus(new Path(s"$root/data/batch-legacy"))
+    batch(0, 200).repartitionByRange(4, col("id")).write.parquet(s"$root/data/batch-old")
+    val files = fs.listStatus(new Path(s"$root/data/batch-old"))
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val body = "graft-manifest v1\nversion=1\n" +
-      files.map(f => s"${f.getPath.toString}\t${f.getLen}").mkString("", "\n", "\n")
-    val sum = org.apache.commons.codec.digest.DigestUtils.md5Hex(
-      body.getBytes("UTF-8"))
-    fs.mkdirs(new Path(s"$root/_manifests"))
-    val out = fs.create(new Path(s"$root/_manifests/v${"%020d".format(1)}.manifest"), false)
-    out.write((body + s"checksum=$sum\n").getBytes("UTF-8")); out.close()
+    writeManifest(root, 1L, "graft-manifest v1\nversion=1\n" +
+      files.map(f => s"${f.getPath.toString}\t${f.getLen}").mkString("", "\n", "\n"))
+    refusedEverywhere(root, 1L)
 
-    val legacy = ManifestStore.latestSnapshot(spark, root).get
-    assert(legacy.schema.isEmpty && legacy.files.forall(_.stats.isEmpty))
-    val pred = Seq(GreaterThanOrEqual("id", 180L))
-    assert(ManifestStore.prunedEntries(legacy, pred).size == legacy.files.size,
-      "a legacy table has nothing to skip with")
-    assert(ids(ManifestStore.readWhere(spark, root, pred)) == (180L until 200L),
-      "legacy reads stay correct, just unpruned")
-
-    val v2 = ManifestStore.upgradeTable(spark, root)
-    assert(v2 == 2L)
-    val up = ManifestStore.latestSnapshot(spark, root).get
-    assert(up.schema.isDefined && up.files.forall(f => f.rows.isDefined && f.stats.contains("id")))
-    assert(ManifestStore.prunedEntries(up, pred).size < up.files.size,
-      "the upgraded table must skip")
-    assert(ids(ManifestStore.readWhere(spark, root, pred)) == (180L until 200L))
-    // idempotent: a fully-enriched table is a no-op
-    assert(ManifestStore.upgradeTable(spark, root) == 2L)
-    // and ordinary appends compose on top
-    assert(ManifestStore.append(spark, batch(200, 210), root) == 3L)
-    assert(ids(ManifestStore.read(spark, root)) == (0L until 210L))
+    // checksum-valid v2 manifests on top of an intact v1: one entry's meta
+    // without "r", or a meta that does not parse — refused, never served as v1
+    for (mangle <- Seq[String => String](
+        _.replaceFirst("\\{\"r\":\\d+,", "{"),
+        _.replaceFirst("\t\\{\"r\":[^\n]*", "\t{\"r\":"))) {
+      val r = freshRoot()
+      ManifestStore.append(spark, batch(0, 50).repartition(2), r)
+      val in = fs.open(new Path(s"$r/_manifests/v${"%020d".format(1)}.manifest"))
+      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val body = text.substring(0, text.lastIndexOf("checksum="))
+        .replace("\nversion=1\n", "\nversion=2\n")
+      val mangled = mangle(body)
+      assert(mangled != body && mangled.contains("schema="))
+      writeManifest(r, 2L, mangled)
+      refusedEverywhere(r, 2L)
+    }
   }
 
   /** r10 review sweep: the places where skipping could go from "opens too
@@ -941,16 +979,18 @@ class ManifestStoreSpec extends SparkSpec {
     assert(ids(ManifestStore.readWhere(spark, root2, Seq(IsNotNull("maybe")))) == Seq(2L))
     assert(ids(ManifestStore.readWhere(spark, root2, Seq(IsNull("maybe")))) == Seq(1L))
 
-    // malformed meta fields degrade to stats-LESS (skip-nothing), never to
-    // wrong stats like "no nulls here"
+    // malformed meta fields are rejected (the manifest parser then refuses
+    // the manifest), never read as wrong stats like "no nulls here"; so is
+    // a meta without its row count
     import graft.sources.ManifestStats
     assert(ManifestStats.parseMeta("""{"r":10,"s":{"c":{"t":"long","n":"junk"}}}""").isEmpty)
     assert(ManifestStats.parseMeta("""{"r":"ten"}""").isEmpty)
     assert(ManifestStats.parseMeta("""{"s":{"c":{"t":5,"n":0}}}""").isEmpty)
     assert(ManifestStats.parseMeta("""{"p":{"k":7}}""").isEmpty)
+    assert(ManifestStats.parseMeta("""{"s":{"c":{"t":"long","n":0}}}""").isEmpty)
     val ok = ManifestStats.parseMeta("""{"r":10,"s":{"c":{"t":"long","m":"1","x":"9","n":0}},"p":{"k":null}}""")
     assert(ok.exists { case (r, s, p, dv) =>
-      r.contains(10L) && s("c").min.contains("1") && p.exists(_("k").isEmpty) && dv.isEmpty })
+      r == 10L && s("c").min.contains("1") && p.exists(_("k").isEmpty) && dv.isEmpty })
     // dv round-trip, and a malformed dv refuses the whole meta (a dropped
     // vector would resurrect deleted rows — it must never degrade)
     val okDv = ManifestStats.parseMeta("""{"r":10,"d":{"p":"file:/x/dv.parquet","n":3}}""")
@@ -1088,7 +1128,8 @@ class ManifestStoreSpec extends SparkSpec {
 
   /** review r11: a flat column literally named "a.b" is indistinguishable
     * from struct leaf a.b in parquet's dot-string addressing — new writes
-    * refuse, and legacy collisions never produce (merged, unsound) stats.
+    * refuse, and collisions in parquet adopted by CONVERT TO MANIFEST
+    * never produce (merged, unsound) stats.
     */
   test("literal-dot column names refuse at write; legacy collisions yield no stats") {
     val root = freshRoot()
@@ -1098,25 +1139,15 @@ class ManifestStoreSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("literal '.'"), e.getMessage)
 
-    // legacy table holding BOTH a flat `a.b` (all null) and struct a{b}
+    // adopted parquet holding BOTH a flat `a.b` (all null) and struct a{b}
     // (no nulls): merged stats would claim "100 nulls in 100 rows" and
     // prune IsNotNull wrongly — the colliding key must get NO stats
     val r2 = freshRoot()
-    val fs = new Path(r2).getFileSystem(spark.sparkContext.hadoopConfiguration)
     spark.range(100).select(col("id"),
         struct(col("id").as("b")).as("a"),
         lit(null).cast("long").as("a.b"))
-      .coalesce(1).write.parquet(s"$r2/data/batch-legacy")
-    val files = fs.listStatus(new Path(s"$r2/data/batch-legacy"))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val body = "graft-manifest v1\nversion=1\n" +
-      files.map(f => s"${f.getPath.toString}\t${f.getLen}").mkString("", "\n", "\n")
-    val sum = org.apache.commons.codec.digest.DigestUtils.md5Hex(body.getBytes("UTF-8"))
-    fs.mkdirs(new Path(s"$r2/_manifests"))
-    val out = fs.create(new Path(s"$r2/_manifests/v${"%020d".format(1)}.manifest"), false)
-    out.write((body + s"checksum=$sum\n").getBytes("UTF-8")); out.close()
-
-    ManifestStore.upgradeTable(spark, r2)
+      .coalesce(1).write.mode("overwrite").parquet(r2)
+    ManifestStore.convertParquet(spark, r2)
     val up = ManifestStore.latestSnapshot(spark, r2).get
     assert(up.files.forall(e2 => !e2.stats.contains("a.b")),
       s"colliding dot-string must never carry stats: ${up.files.head.stats.keySet}")
@@ -1731,42 +1762,6 @@ class ManifestStoreSpec extends SparkSpec {
     assert(ids(ManifestStore.read(spark, root)) == (0L until 5L))
   }
 
-  /** advice r11 (low): legacy (pre-schema-line) tables seed their schema
-    * from the UNION of footers, not files.head's — a mixed-footer table
-    * must not permanently drop the columns that live only in other files.
-    */
-  test("legacy schema seeding unions mixed footers instead of trusting one") {
-    val fs = new Path(freshRoot()).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def mkLegacy(root: String): Unit = {
-      // two footers with DIFFERENT column sets: (id, a) and (id, b)
-      Seq((1L, "a1")).toDF("id", "a").write.parquet(s"$root/data/batch-l1")
-      Seq((2L, "b2")).toDF("id", "b").write.parquet(s"$root/data/batch-l2")
-      val files = Seq("batch-l1", "batch-l2").flatMap(d =>
-        fs.listStatus(new Path(s"$root/data/$d"))
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet")))
-      val body = "graft-manifest v1\nversion=1\n" +
-        files.map(f => s"${f.getPath.toString}\t${f.getLen}").mkString("", "\n", "\n")
-      val sum = org.apache.commons.codec.digest.DigestUtils.md5Hex(body.getBytes("UTF-8"))
-      fs.mkdirs(new Path(s"$root/_manifests"))
-      val out = fs.create(new Path(s"$root/_manifests/v${"%020d".format(1)}.manifest"), false)
-      out.write((body + s"checksum=$sum\n").getBytes("UTF-8")); out.close()
-    }
-    // upgradeTable path: the committed schema must carry BOTH a and b
-    val r1 = freshRoot(); mkLegacy(r1)
-    ManifestStore.upgradeTable(spark, r1)
-    val up = ManifestStore.latestSnapshot(spark, r1).get
-    assert(up.schema.exists(s => s.fieldNames.contains("a") && s.fieldNames.contains("b")),
-      s"upgrade seeded a head-footer-only schema: ${up.schema}")
-    assert(ManifestStore.read(spark, r1).columns.toSet == Set("id", "a", "b"))
-    // append path: the merged schema unions footers too
-    val r2 = freshRoot(); mkLegacy(r2)
-    ManifestStore.append(spark, Seq((3L, "a3")).toDF("id", "a"), r2)
-    val ap = ManifestStore.latestSnapshot(spark, r2).get
-    assert(ap.schema.exists(s => s.fieldNames.contains("b")),
-      s"append seeding dropped column b: ${ap.schema}")
-    assert(ManifestStore.read(spark, r2).where(col("b").isNotNull).count() == 1L)
-  }
-
   /** advice r12 (was r11 low): a file appended AFTER fromVersion that then
     * gained a deletion vector within the same polled range carries a dv the
     * from-snapshot never saw — "new files" would emit its NET rows and
@@ -1789,27 +1784,19 @@ class ManifestStoreSpec extends SparkSpec {
   }
 
   /** advice r12: the literal-dot refusal guards EXTERNAL frames only — a
-    * legacy table that already carries a flat `a.b` column must stay
-    * compactable and deletable in place (the maintenance rewrite reads the
-    * table's own committed schema; the collision predates the guard).
+    * table that already carries a flat `a.b` column (CONVERT TO MANIFEST
+    * adopts one from plain parquet) must stay compactable and deletable in
+    * place (the maintenance rewrite reads the table's own committed
+    * schema; the column predates the table).
     */
   test("legacy dotted-column tables stay compactable and deletable") {
     val root = freshRoot()
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     spark.range(100).select(col("id"), lit(7L).as("a.b"))
-      .coalesce(1).write.parquet(s"$root/data/batch-legacy")
-    val files = fs.listStatus(new Path(s"$root/data/batch-legacy"))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val body = "graft-manifest v1\nversion=1\n" +
-      files.map(f => s"${f.getPath.toString}\t${f.getLen}").mkString("", "\n", "\n")
-    val sum = org.apache.commons.codec.digest.DigestUtils.md5Hex(body.getBytes("UTF-8"))
-    fs.mkdirs(new Path(s"$root/_manifests"))
-    val out = fs.create(new Path(s"$root/_manifests/v${"%020d".format(1)}.manifest"), false)
-    out.write((body + s"checksum=$sum\n").getBytes("UTF-8")); out.close()
-    ManifestStore.upgradeTable(spark, root)
+      .coalesce(1).write.mode("overwrite").parquet(root)
+    ManifestStore.convertParquet(spark, root)
 
     val (nb, na, vc) = ManifestStore.compact(spark, root, targetFileBytes = 1L << 30)
-    assert(vc > 0, s"compaction of a legacy dotted table must commit, got $vc")
+    assert(vc > 0, s"compaction of an adopted dotted table must commit, got $vc")
     assert(nb == 1 && na >= 1)
     assert(ManifestStore.read(spark, root).count() == 100L)
     assert(ManifestStore.read(spark, root).columns.toSet == Set("id", "a.b"))

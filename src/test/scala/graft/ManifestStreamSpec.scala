@@ -334,7 +334,7 @@ class ManifestStreamSpec extends SparkSpec {
     val source = new graft.streaming.ManifestStreamSource(
       spark, src, changeFeed = false, startVersion = 0L,
       maxVersionsPerTrigger = None, maxBytesPerTrigger = None,
-      tableSchema = M.tableSchemaOf(spark, M.latestSnapshot(spark, src).get))
+      tableSchema = M.tableSchemaOf(M.latestSnapshot(spark, src).get))
     val batch = source.getBatch(None,
       graft.streaming.ManifestSourceOffset(1L))
     assert(batch.isStreaming, "getBatch must return a streaming-flagged frame")
