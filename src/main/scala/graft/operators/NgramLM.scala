@@ -161,7 +161,7 @@ object NgramLM {
     * header's no-text-shuffle contract holds only with it).
     */
   private def docGrams(docs: DataFrame, idCol: String, textCol: String, n: Int,
-                       repartitionFirst: Boolean = true): DataFrame =
+                       repartitionFirst: Boolean): DataFrame =
     gramStream(docs, Seq(idCol), textCol, n, repartitionFirst = repartitionFirst)
 
   /** (keep..., gram) occurrence stream. Tokens are projected behind a

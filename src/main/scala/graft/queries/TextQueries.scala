@@ -79,9 +79,6 @@ object TextQueries {
       .select("token")
   }
 
-  private def vocabDF(s: SparkSession, d: String): DataFrame =
-    vocabOf(s, d, tokensDF(s, d))
-
   val defs: Seq[QueryDef] = Seq(
 
     // F1: canonical tokenizer — corpus-wide token frequencies.

@@ -1911,90 +1911,26 @@ object ManifestStore {
   /** CDC-lite incremental consumption: the rows APPENDED strictly after
     * `fromVersion`, as (currentVersion, frame) — poll `latestSnapshot`,
     * call this with the last version you processed, checkpoint the
-    * returned version. Sound over append-only ranges AND (r12) across
-    * PHYSICAL rewrites: a compaction/materialization commit is
-    * op-labeled in the manifest and verified row-conserving, so the span
-    * walk skips it — table maintenance no longer breaks tail consumers.
-    * DATA-CHANGING rewrites (CoW delete/upsert, pre-r12 unlabeled
-    * commits) still REFUSE loudly — "new files" would double- or
-    * mis-count rewritten rows — and the consumer must reprocess from a
-    * full snapshot. An aged-out `fromVersion` (manifest vacuumed) refuses
-    * too: the diff base is unknowable. At 100 TB this is the cheap
-    * tail-read: the diff is a driver-side set difference over manifest
-    * lines, and the scan opens exactly the new batches' files.
+    * returned version. This is the change feed's REFUSAL mode
+    * ([[changesBetween]] with `changeFeed = false`): the same walk, the
+    * same inserts without `_change_type`, and a loud refusal wherever the
+    * feed would emit a delete — a delete is not an append. Physical
+    * rewrites are skipped and data-changing ones refuse, as in
+    * [[readChangesSince]]. At 100 TB this is the cheap tail-read: a
+    * driver-side manifest diff, and a scan of exactly the new files.
     */
   def readAddedSince(spark: SparkSession, root: String,
-                     fromVersion: Long): (Long, DataFrame) = {
+                     fromVersion: Long): (Long, DataFrame) =
+    sinceLatest(spark, root)(changesBetween(spark, root, fromVersion, _, changeFeed = false))
+
+  /** The latest snapshot's version, and `between` applied to it — the
+    * one resolution behind every `read*Since`.
+    */
+  private def sinceLatest(spark: SparkSession, root: String)(
+      between: Snapshot => DataFrame): (Long, DataFrame) = {
     val cur = latestSnapshot(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed manifest under $root"))
-    (cur.version, addedBetween(spark, root, fromVersion, cur))
-  }
-
-  /** [[readAddedSince]] against an ALREADY-RESOLVED end snapshot — the
-    * replay-deterministic core the streaming source checkpoints on: both
-    * ends are immutable committed versions, so a restarted query
-    * recomputes byte-identical batches (a vacuumed `fromVersion` still
-    * refuses loudly — the diff base is unknowable).
-    *
-    * r12: PHYSICAL rewrites in range (op ∈ [[PhysicalOps]], live-row
-    * conservation verified from the manifest's own counts) are SKIPPED
-    * via the span walk ([[spanPairs]]) instead of refusing — table
-    * maintenance no longer breaks tail consumers. Data-changing rewrites
-    * (CoW delete/upsert, pre-r12 unlabeled commits) still refuse loudly,
-    * as do dv changes (tail mode: a delete is not an append).
-    */
-  private[graft] def addedBetween(spark: SparkSession, root: String,
-                                  fromVersion: Long, cur: Snapshot): DataFrame = {
-    require(cur.version >= fromVersion,
-      s"current version ${cur.version} is below fromVersion $fromVersion under $root — " +
-        "the table was recreated; reprocess from a full snapshot")
-    val schema = tableSchemaOf(cur)
-    def emptyFrame: DataFrame =
-      spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    if (cur.version == fromVersion) return emptyFrame
-    val fromSnap = snapshotAt(spark, root, fromVersion).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"version $fromVersion under $root is gone (vacuumed or never intact) — " +
-          "the incremental base is unknowable; reprocess from a full snapshot"))
-    requireSameTable(root, fromSnap, cur)
-    val frames = spanPairs(spark, root, fromSnap, cur).flatMap {
-      case (prev, next) =>
-        if (physicalStepOrRefuse(root, prev, next)) None
-        else addedStep(spark, root, prev, next)
-    }
-    if (frames.isEmpty) emptyFrame
-    else alignedUnion(frames, schema, extra = Seq.empty)
-  }
-
-  /** One removal-free span's appended rows (None when nothing appended) —
-    * the original tail contract applied between two snapshots.
-    */
-  private def addedStep(spark: SparkSession, root: String,
-                        prev: Snapshot, next: Snapshot): Option[DataFrame] = {
-    val oldPaths = prev.files.map(_.path).toSet
-    // a deletion vector moving on a SHARED file is a delete, not an append
-    // — "new files" cannot express it (r11)
-    val oldDv = prev.files.map(f => f.path -> f.dv.map(_.path)).toMap
-    val dvMoved = next.files.filter(f =>
-      oldDv.get(f.path).exists(_ != f.dv.map(_.path))).map(_.path)
-    require(dvMoved.isEmpty,
-      s"${dvMoved.size} file(s) gained or changed a deletion vector between " +
-        s"v${prev.version} and v${next.version} under $root (merge-on-read delete) — " +
-        "incremental reads are only sound over append-only ranges; reprocess " +
-        "from a full snapshot (or consume with changeFeed=true)")
-    val added = next.files.filterNot(f => oldPaths(f.path))
-    // a dv on an ADDED file is still a delete: prev never saw the file, so
-    // the dvMoved check above cannot catch it, and emitting the file's NET
-    // rows would silently hide that a delete happened in-range — the same
-    // "a delete is not an append" contract (advice r11)
-    val addedWithDv = added.filter(_.dv.exists(_.rows > 0))
-    require(addedWithDv.isEmpty,
-      s"${addedWithDv.size} file(s) appended after v${prev.version} already carry a " +
-        s"deletion vector at v${next.version} under $root (merge-on-read delete) — " +
-        "incremental reads are only sound over append-only ranges; reprocess " +
-        "from a full snapshot (or consume with changeFeed=true)")
-    if (added.isEmpty) None
-    else Some(readSnapshot(spark, root, next.copy(files = added), Seq.empty))
+    (cur.version, between(cur))
   }
 
   /** The reserved change-kind column of [[readChangesSince]]. */
@@ -2022,21 +1958,23 @@ object ManifestStore {
     * manifest's own counts and SKIPPED (r12, the Delta `dataChange=false`
     * posture), so maintenance never breaks the feed. An aged-out
     * `fromVersion` refuses too.
-    * This is what [[readAddedSince]] refused to fake: deletes become
+    * This is what [[readAddedSince]] refuses to fake: deletes become
     * expressible the moment they are EXACT. At 100 TB the cost profile is
     * the tail-read's: a driver-side manifest diff, the new batches'
     * files, and the dv-changed files' scan filtered to the diff bitmap —
     * never the accumulated table.
     */
   def readChangesSince(spark: SparkSession, root: String,
-                       fromVersion: Long): (Long, DataFrame) = {
-    val cur = latestSnapshot(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed manifest under $root"))
-    (cur.version, changesBetween(spark, root, fromVersion, cur))
-  }
+                       fromVersion: Long): (Long, DataFrame) =
+    sinceLatest(spark, root)(changesBetween(spark, root, fromVersion, _, changeFeed = true))
 
   /** The reserved commit-attribution column of the versioned change feed. */
   val CommitVersionCol = "_commit_version"
+
+  private val ChangeTypeField =
+    StructField(ChangeTypeCol, org.apache.spark.sql.types.StringType, nullable = false)
+  private val CommitVersionField =
+    StructField(CommitVersionCol, org.apache.spark.sql.types.LongType, nullable = false)
 
   /** [[readChangesSince]] with PER-COMMIT attribution (r13, VERDICT r12
     * #5): every change row additionally carries `_commit_version` — the
@@ -2053,40 +1991,55 @@ object ManifestStore {
     * resolvable version — all exactly the unversioned feed's contracts.
     */
   def readChangesSinceVersioned(spark: SparkSession, root: String,
-                                fromVersion: Long): (Long, DataFrame) = {
-    val cur = latestSnapshot(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed manifest under $root"))
-    (cur.version, changesBetweenVersioned(spark, root, fromVersion, cur))
-  }
+                                fromVersion: Long): (Long, DataFrame) =
+    sinceLatest(spark, root)(changesBetweenVersioned(spark, root, fromVersion, _))
 
-  private[graft] def changesBetweenVersioned(spark: SparkSession, root: String,
-                                             fromVersion: Long,
-                                             cur: Snapshot): DataFrame = {
+  /** The preamble every version-range read shares, around `frames`
+    * (which gets the resolved base snapshot): the range must not run
+    * backwards (a recreated table), `extra` must not collide with a table
+    * column, an empty range is the typed empty frame (table columns plus
+    * `extra`), an aged-out base refuses, and both ends must belong to the
+    * same table. With `emptyBase`, version 0 is a synthetic empty base:
+    * the earliest resolvable version owns the initial state. The frames
+    * union onto the END snapshot's columns plus `extra`.
+    */
+  private def rangeFrame(spark: SparkSession, root: String, fromVersion: Long,
+                         cur: Snapshot, extra: Seq[StructField],
+                         emptyBase: Boolean = false)(
+      frames: Snapshot => Seq[DataFrame]): DataFrame = {
     require(cur.version >= fromVersion,
       s"current version ${cur.version} is below fromVersion $fromVersion under $root — " +
         "the table was recreated; reprocess from a full snapshot")
     val schema = tableSchemaOf(cur)
-    Seq(ChangeTypeCol, CommitVersionCol).foreach(c =>
-      require(!schema.fieldNames.contains(c),
-        s"table schema collides with the reserved change column $c"))
-    def emptyChanges: DataFrame = spark.createDataFrame(
-      new java.util.ArrayList[Row](),
-      StructType(schema.fields ++ Seq(
-        org.apache.spark.sql.types.StructField(ChangeTypeCol,
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField(CommitVersionCol,
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    if (cur.version == fromVersion) return emptyChanges
-    // every resolvable version in range, in order — each is one
-    // attribution step. fromVersion = 0 starts from a synthetic empty
-    // base: the earliest resolvable version owns the initial state.
+    extra.foreach(f => require(!schema.fieldNames.contains(f.name),
+      s"table schema collides with the reserved change column ${f.name}"))
+    def empty: DataFrame = spark.createDataFrame(
+      new java.util.ArrayList[Row](), StructType(schema.fields ++ extra))
+    if (cur.version == fromVersion) return empty
     val fromSnap =
-      if (fromVersion == 0L) Snapshot(0L, Seq.empty, tableId = cur.tableId)
+      if (emptyBase && fromVersion == 0L) Snapshot(0L, Seq.empty, tableId = cur.tableId)
       else snapshotAt(spark, root, fromVersion).getOrElse(
         throw new java.util.NoSuchElementException(
           s"version $fromVersion under $root is gone (vacuumed or never intact) — " +
-            "the change base is unknowable; reprocess from a full snapshot"))
+            "the incremental base is unknowable; reprocess from a full snapshot"))
     requireSameTable(root, fromSnap, cur)
+    val built = frames(fromSnap)
+    if (built.isEmpty) empty else alignedUnion(built, schema, extra.map(_.name))
+  }
+
+  private[graft] def changesBetweenVersioned(spark: SparkSession, root: String,
+                                             fromVersion: Long,
+                                             cur: Snapshot): DataFrame =
+    rangeFrame(spark, root, fromVersion, cur, Seq(ChangeTypeField, CommitVersionField),
+      emptyBase = true)(versionedFrames(spark, root, _, cur))
+
+  /** The versioned feed's frames over (fromSnap, cur]: every resolvable
+    * version in range, in order, is one attribution step. This walk, not
+    * the bisected [[spanPairs]] of the net feeds, because per-commit
+    * attribution cannot net out across versions.
+    */
+  private def versionedFrames(spark: SparkSession, root: String,
+                              fromSnap: Snapshot, cur: Snapshot): Seq[DataFrame] = {
     // ONE raw-manifest walk over (from, cur] (advice r13): each intact
     // interior version contributes its own INCREMENT — a delta manifest's
     // bytes, or a checkpoint's diff against the running state — applied
@@ -2103,7 +2056,7 @@ object ManifestStore {
     import scala.jdk.CollectionConverters._
     val state = new java.util.LinkedHashMap[String, ManifestEntry]()
     fromSnap.files.foreach(f => state.put(f.path, f))
-    var stateVersion = fromVersion
+    var stateVersion = fromSnap.version
     var stateSchema = fromSnap.schema
     var statePartCols = fromSnap.partCols
     var stateTableId = fromSnap.tableId
@@ -2176,7 +2129,7 @@ object ManifestStore {
           partCols = statePartCols, op = op, tableId = stateTableId,
           colMap = stateColMap, droppedPhys = stateDropped)
         if (!physicalStepOrRefuse(root, prevSnap, nextSnap))
-          changesStep(spark, root, prevSnap, nextSnap).foreach(df =>
+          changesStep(spark, root, prevSnap, nextSnap, changeFeed = true).foreach(df =>
             frames += df.withColumn(CommitVersionCol, lit(v)))
       }
     }
@@ -2186,7 +2139,7 @@ object ManifestStore {
       step(v, rm, s.files, s.schema, Some(s.partCols), s.tableId, s.op,
         Some(s.colMap), Some(s.droppedPhys))
     }
-    for (v <- (fromVersion + 1) to cur.version) {
+    for (v <- (fromSnap.version + 1) to cur.version) {
       if (v == cur.version) stepFull(v, cur) // already resolved
       else parse(fs, rootP, v) match {
         case None => () // torn/vacuumed interior: coarsen onto the next one
@@ -2203,63 +2156,69 @@ object ManifestStore {
       }
     }
     flushRun()
-    val built = frames.result()
-    if (built.isEmpty) emptyChanges
-    else alignedUnion(built, schema, extra = Seq(ChangeTypeCol, CommitVersionCol))
+    frames.result()
   }
 
-  /** [[readChangesSince]] against an ALREADY-RESOLVED end snapshot — the
-    * replay-deterministic core of the change-feed streaming source (same
-    * posture as [[addedBetween]]: immutable ends, byte-identical replays,
-    * loud refusal on a vacuumed base or a DATA-CHANGING copy-on-write
-    * rewrite; PHYSICAL rewrites — compaction, materialization — are
-    * verified row-conserving and skipped via the span walk, r12).
+  /** The net feeds against an ALREADY-RESOLVED end snapshot — the
+    * replay-deterministic core the streaming source checkpoints on: both
+    * ends are immutable committed versions, so a restarted query
+    * recomputes byte-identical batches; a vacuumed base or a DATA-CHANGING
+    * copy-on-write rewrite refuses loudly, and PHYSICAL rewrites —
+    * compaction, materialization — are verified row-conserving and
+    * skipped via the span walk (r12). `changeFeed = true` is
+    * [[readChangesSince]]'s frame; `false` is [[readAddedSince]]'s, the
+    * same spans and steps with every dv change refused (see [[changesStep]]).
     * Caveat (pre-r12 semantics preserved): a file appended AND rewritten
     * entirely WITHIN one removal-free span nets out to its final rows —
     * the consumer never saw the intermediate state (the same net-effect
     * contract as in-span dv growth on an in-span-added file).
     */
   private[graft] def changesBetween(spark: SparkSession, root: String,
-                                    fromVersion: Long, cur: Snapshot): DataFrame = {
-    require(cur.version >= fromVersion,
-      s"current version ${cur.version} is below fromVersion $fromVersion under $root — " +
-        "the table was recreated; reprocess from a full snapshot")
-    val schema = tableSchemaOf(cur)
-    require(!schema.fieldNames.contains(ChangeTypeCol),
-      s"table schema collides with the reserved change column $ChangeTypeCol")
-    def emptyChanges: DataFrame = spark.createDataFrame(
-      new java.util.ArrayList[Row](),
-      StructType(schema.fields :+ org.apache.spark.sql.types.StructField(
-        ChangeTypeCol, org.apache.spark.sql.types.StringType, nullable = false)))
-    if (cur.version == fromVersion) return emptyChanges
-    val fromSnap = snapshotAt(spark, root, fromVersion).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"version $fromVersion under $root is gone (vacuumed or never intact) — " +
-          "the change base is unknowable; reprocess from a full snapshot"))
-    requireSameTable(root, fromSnap, cur)
-    val frames = spanPairs(spark, root, fromSnap, cur).flatMap {
-      case (prev, next) =>
-        if (physicalStepOrRefuse(root, prev, next)) None
-        else changesStep(spark, root, prev, next)
+                                    fromVersion: Long, cur: Snapshot,
+                                    changeFeed: Boolean): DataFrame =
+    rangeFrame(spark, root, fromVersion, cur,
+      if (changeFeed) Seq(ChangeTypeField) else Seq.empty) { fromSnap =>
+      spanPairs(spark, root, fromSnap, cur).flatMap {
+        case (prev, next) =>
+          if (physicalStepOrRefuse(root, prev, next)) None
+          else changesStep(spark, root, prev, next, changeFeed)
+      }
     }
-    if (frames.isEmpty) emptyChanges
-    else alignedUnion(frames, schema, extra = Seq(ChangeTypeCol))
-  }
 
   /** One removal-free span's row-level changes (None when there are none):
     * appended files' live rows as `insert`, dv growth as `delete` at
-    * exactly the newly-deleted positions.
+    * exactly the newly-deleted positions. With `changeFeed = false` (the
+    * append-only tail) the inserts carry no `_change_type`, and any dv
+    * change refuses instead — a delete is not an append.
     */
   private def changesStep(spark: SparkSession, root: String,
-                          prev: Snapshot, next: Snapshot): Option[DataFrame] = {
+                          prev: Snapshot, next: Snapshot,
+                          changeFeed: Boolean): Option[DataFrame] = {
     val oldByPath = prev.files.map(f => f.path -> f).toMap
     val added = next.files.filterNot(f => oldByPath.contains(f.path))
     val dvGrew = next.files.filter(f => oldByPath.get(f.path).exists(o =>
       o.dv.map(_.path) != f.dv.map(_.path)))
+    if (!changeFeed) {
+      def refusal(what: String): String =
+        s"$what under $root (merge-on-read delete) — incremental reads are only " +
+          "sound over append-only ranges; reprocess from a full snapshot (or " +
+          "consume with changeFeed=true)"
+      require(dvGrew.isEmpty, refusal(
+        s"${dvGrew.size} file(s) gained or changed a deletion vector between " +
+          s"v${prev.version} and v${next.version}"))
+      // a dv on an ADDED file is still a delete: prev never saw the file,
+      // and emitting the file's NET rows would silently hide that a delete
+      // happened in-range (advice r11)
+      val addedWithDv = added.count(_.dv.exists(_.rows > 0))
+      require(addedWithDv == 0, refusal(
+        s"$addedWithDv file(s) appended after v${prev.version} already carry a " +
+          s"deletion vector at v${next.version}"))
+    }
     val parts = Seq.newBuilder[DataFrame]
-    if (added.nonEmpty)
-      parts += readSnapshot(spark, root, next.copy(files = added), Seq.empty)
-        .withColumn(ChangeTypeCol, lit("insert"))
+    if (added.nonEmpty) {
+      val inserts = readSnapshot(spark, root, next.copy(files = added), Seq.empty)
+      parts += (if (changeFeed) inserts.withColumn(ChangeTypeCol, lit("insert")) else inserts)
+    }
     if (dvGrew.nonEmpty) {
       val newBms = DvBitmap.loadBitmaps(spark, dvGrew.flatMap(_.dv.map(_.path)))
       val oldDvPaths = dvGrew.flatMap(f => oldByPath(f.path).dv.map(_.path))
@@ -2401,90 +2360,6 @@ object ManifestStore {
       else df.withColumn(f.name, lit(null).cast(f.dataType)))
     filled.select(
       (outSchema.fieldNames.toSeq ++ extra).map(n => col(quoteIdent(n))): _*)
-  }
-
-  /** Manifest→manifest micro-pipeline over [[readAddedSince]] (r11,
-    * VERDICT r10 #6) — the poll/checkpoint loop consumers previously
-    * hand-rolled, with EXACTLY-ONCE delivery and no checkpoint store of
-    * its own: each processed source version commits to `dstRoot` through
-    * [[appendBatch]] with `batchId = sourceVersion`, so the destination's
-    * txn watermark IS the resume point — a crash before the commit
-    * recomputes the same deterministic diff, a crash after it no-ops at
-    * the watermark, and a fresh run resumes from
-    * `dst.txns(appId)` automatically.
-    *
-    * Each tick either processes the versions committed since the last
-    * processed one (one transform + one append) or sleeps `pollMs`. The
-    * first ever batch is the FULL current snapshot (there is no committed
-    * base to diff against). Returns the last processed source version
-    * after `ticks` ticks.
-    *
-    * Refusal semantics surface as failure, by design: a DATA-CHANGING
-    * rewrite (CoW delete/upsert) on the source between ticks makes the
-    * pending diff unknowable ([[readAddedSince]] throws — compaction and
-    * other physical rewrites pass through since r12), and the exception propagates
-    * out of the loop — reprocess from a full snapshot (fresh destination,
-    * or re-run after a destination truncate) rather than silently double-
-    * or mis-counting rewritten rows. `transform` must be deterministic
-    * (the redelivery recompute contract, same as every foreachBatch sink
-    * here); an all-dropped batch appends nothing and therefore does not
-    * advance the watermark — its versions are simply re-diffed next tick,
-    * converging to the same empty result.
-    *
-    * 100 TB posture: per tick the source pays a hint-accelerated snapshot
-    * resolution + a driver-side manifest diff, and the scan opens exactly
-    * the NEW batches' files — cost scales with the increment, never the
-    * accumulated table.
-    */
-  /** `changeFeed = true` (r12): each batch is the [[readChangesSince]]
-    * frame instead of the appended tail — table columns plus
-    * `_change_type ∈ insert | delete` — so the destination accrues an
-    * exactly-once CHANGE LOG (the Delta-CDF consumption shape) and
-    * merge-on-read deletes/upserts on the source STREAM instead of
-    * refusing the whole pipeline. The first ever batch is the full
-    * current snapshot as `insert` rows. Copy-on-write rewrites still
-    * refuse (unknowable diff), exactly like the plain tail.
-    */
-  def tailStream(spark: SparkSession, srcRoot: String, dstRoot: String,
-                 appId: String,
-                 transform: DataFrame => DataFrame = identity,
-                 partitionBy: Seq[String] = Nil,
-                 ticks: Int = 1,
-                 pollMs: Long = 1000L,
-                 changeFeed: Boolean = false): Long = {
-    require(ticks >= 1, s"ticks must be positive: $ticks")
-    var last = latestSnapshot(spark, dstRoot)
-      .map(_.txns.getOrElse(appId, 0L)).getOrElse(0L)
-    var tick = 0
-    while (tick < ticks) {
-      tick += 1
-      val advanced =
-        if (last == 0L) latestSnapshot(spark, srcRoot) match {
-          case Some(cur) if cur.files.nonEmpty =>
-            val full = readSnapshot(spark, srcRoot, cur, Seq.empty)
-            val out = transform(
-              if (changeFeed) full.withColumn(ChangeTypeCol, lit("insert"))
-              else full)
-            appendBatch(spark, out, dstRoot, appId, cur.version,
-              partitionBy = partitionBy)
-            last = cur.version
-            true
-          case _ => false
-        } else {
-          val (v, frame) = // both throw on an unknowable rewrite
-            if (changeFeed) readChangesSince(spark, srcRoot, last)
-            else readAddedSince(spark, srcRoot, last)
-          if (v > last) {
-            if (!frame.isEmpty)
-              appendBatch(spark, transform(frame), dstRoot, appId, v,
-                partitionBy = partitionBy)
-            last = v
-            true
-          } else false
-        }
-      if (!advanced && tick < ticks) Thread.sleep(pollMs)
-    }
-    last
   }
 
   /** The latest snapshot as a PLANNER-INTEGRATED DataFrame — the idiomatic

@@ -42,8 +42,8 @@ import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, sum
   */
 object Materialized {
 
-  /** One maintained tick (or `ticks` of them, polling like
-    * [[ManifestStore.tailStream]]): advance the grouped COUNT (+ SUMs,
+  /** One maintained tick (or `ticks` of them, sleeping `pollMs` between
+    * idle ones): advance the grouped COUNT (+ SUMs,
     * + MIN/MAXes) table under `dstRoot` to the source's current version.
     * The destination schema is `keys ++ [n] ++ sumCols.map("sum_" + _) ++
     * minMaxCols.flatMap(c => ["min_" + c, "max_" + c])`.

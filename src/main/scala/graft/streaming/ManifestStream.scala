@@ -32,10 +32,11 @@ object ManifestSourceOffset {
 
 /** True Structured Streaming source over a [[ManifestStore]] table
   * (VERDICT r11 #7): `spark.readStream.format("graft-manifest").load(root)`
-  * replaces the hand-rolled `tailStream` poll loop with engine triggers,
-  * offset checkpointing, progress metrics and restart recovery.
+  * tails a table with engine triggers, offset checkpointing, progress
+  * metrics and restart recovery.
   *
-  * Batch semantics are exactly the library tail's:
+  * Batch semantics are exactly the library tail's ([[ManifestStore.readAddedSince]]
+  * / [[ManifestStore.readChangesSince]]):
   *
   *  - the first batch from a fresh checkpoint is the FULL snapshot (or
   *    everything after `startingVersion`);
@@ -227,10 +228,7 @@ class ManifestStreamSource(
               full.withColumn(ManifestStore.ChangeTypeCol, lit("insert"))
             else full
           }
-        } else if (changeFeed)
-          ManifestStore.changesBetween(spark, root, fromV, endSnap)
-        else
-          ManifestStore.addedBetween(spark, root, fromV, endSnap)
+        } else ManifestStore.changesBetween(spark, root, fromV, endSnap, changeFeed)
       }
     // project to the stream's declared columns IN ORDER (the engine maps
     // getBatch output to the relation positionally). A batch replaying a

@@ -2075,40 +2075,6 @@ class ManifestStoreSpec extends SparkSpec {
       e.getMessage.contains("op=delete"), e.getMessage)
   }
 
-  /** r12: tailStream in changeFeed mode streams MoR upserts end-to-end as
-    * an exactly-once change log (VERDICT r11 #6's consumer half — the
-    * plain tail REFUSES across an upsert; the change feed expresses it).
-    */
-  test("tailStream changeFeed: MoR upserts stream exactly-once as a change log") {
-    val src = freshRoot()
-    val dst = freshRoot()
-    ManifestStore.append(spark,
-      spark.range(0, 100).select(col("id"), lit("old").as("p"))
-        .repartitionByRange(2, col("id")).sortWithinPartitions("id"), src)
-    // tick 1: full snapshot as inserts
-    val l1 = ManifestStore.tailStream(spark, src, dst, "cdc", changeFeed = true)
-    assert(l1 == 1L)
-    assert(ManifestStore.read(spark, dst).count() == 100L)
-    // a MoR upsert on the source: 10 updates + 5 brand-new keys
-    val ups = spark.range(90, 105).select(col("id"), lit("new").as("p"))
-    val (replaced, _, _) = ManifestStore.upsertByKeyMergeOnRead(
-      spark, src, ups, Seq("id"), maxProbeKeys = 1000000)
-    assert(replaced == 10L)
-    // tick 2: the upsert streams as 15 inserts + 10 deletes
-    val l2 = ManifestStore.tailStream(spark, src, dst, "cdc", changeFeed = true)
-    assert(l2 > l1)
-    val log = ManifestStore.read(spark, dst)
-    assert(log.count() == 125L)
-    assert(log.where(col("_change_type") === "delete")
-      .select("id").as[Long].collect().sorted.toSeq == (90L until 100L))
-    assert(log.where(col("_change_type") === "insert" && col("p") === "new")
-      .count() == 15L)
-    // crash-replay: a third tick at the same watermark appends nothing
-    val l3 = ManifestStore.tailStream(spark, src, dst, "cdc", changeFeed = true)
-    assert(l3 == l2)
-    assert(ManifestStore.read(spark, dst).count() == 125L)
-  }
-
   /** r12 (VERDICT r11 #4): library reads plan through the same
     * HadoopFsRelation machinery as the format — a 100-leaf partitioned
     * read is ONE native FileSourceScan with the partition values carried

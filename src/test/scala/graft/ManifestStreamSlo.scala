@@ -4,9 +4,9 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.{ManifestStore => M}
 
-/** Streaming-endpoint SLO (r12): what does the ENGINE cost per trigger on
-  * top of the library tail, and what does the span walk cost to construct
-  * across a maintenance-bearing backlog?
+/** Streaming-endpoint SLO (r12): what does the ENGINE cost per trigger,
+  * and what does the span walk cost to construct across a
+  * maintenance-bearing backlog?
   *
   *  - catch-up arms: a 30-commit backlog consumed as ONE batch vs PAGED
   *    at maxVersionsPerTrigger=1 (30 micro-batches) — the paged total
@@ -14,8 +14,7 @@ import graft.sources.{ManifestStore => M}
   *    micro-batch (offset log + commit log + batch planning);
   *  - idle-restart arm: AvailableNow with nothing new — the fixed floor a
   *    scheduled restart pays;
-  *  - library baseline: tailStream folding the same backlog in one tick;
-  *  - walk arm: changesBetween CONSTRUCTION time over a 400-version range,
+  *  - walk arm: readChangesSince CONSTRUCTION time over a 400-version range,
   *    pure-append (one span, zero interior resolutions) vs with one
   *    mid-range compaction (bisected boundary search + 2 spans), plus one
   *    full execution for the answer's sanity.
@@ -55,14 +54,9 @@ object ManifestStreamSlo {
     require(M.latestSnapshot(spark, dst2).get.version == nCommits.toLong,
       "paged run must land one destination version per source commit")
     val idle = (0 until 3).map(_ => wallMs(runOnce(src, dst1, ck1))).min
-    val (dst3, _) = (fresh("dst3"), ())
-    val tailOne = wallMs {
-      M.tailStream(spark, src, dst3, "slo-tail"): Unit
-    }
     println(f"STREAMSLO catchup commits=$nCommits one_batch=${oneBatch / 1000}%.2fs " +
       f"paged=${paged / 1000}%.2fs per_trigger_marginal=" +
-      f"${(paged - oneBatch) / (nCommits - 1)}%.0fms idle_restart=${idle / 1000}%.2fs " +
-      f"tailStream_one_tick=${tailOne / 1000}%.2fs")
+      f"${(paged - oneBatch) / (nCommits - 1)}%.0fms idle_restart=${idle / 1000}%.2fs")
 
     // ---- walk arm: 400 versions, construction cost ---------------------
     def buildTable(withCompact: Boolean): String = {

@@ -211,6 +211,24 @@ class ManifestStreamSpec extends SparkSpec {
     assert(msg.contains("not derivable") || msg.contains("reprocess"),
       s"expected the rewrite refusal, got: $msg")
     assert(ids(dst) == (1L to 60L), "the failed batch must not have committed")
+
+    // a merge-on-read delete is not an append either: the plain
+    // (changeFeed=false) stream refuses it, naming the deletion vector
+    val morSrc = freshDir("morsrc"); val morDst = freshDir("mordst")
+    val morCkpt = freshDir("morckpt")
+    M.append(spark, (1L to 20L).toDF("id"), morSrc)
+    runOnce(morSrc, morDst, morCkpt)
+    val dstVersion = M.latestSnapshot(spark, morDst).get.version
+    M.append(spark, (21L to 30L).toDF("id"), morSrc)
+    val (nMor, nFiles, _) = M.deleteWhereMergeOnRead(spark, morSrc, Seq(EqualTo("id", 5L)))
+    assert(nMor == 1L && nFiles > 0, "the MoR delete must have tagged a file")
+    val exMor = intercept[StreamingQueryException] { runOnce(morSrc, morDst, morCkpt) }
+    val morMsg = Iterator.iterate[Throwable](exMor)(_.getCause).takeWhile(_ != null)
+      .map(_.toString).mkString(" | ")
+    assert(morMsg.contains("deletion vector"), s"expected the dv refusal, got: $morMsg")
+    assert(M.latestSnapshot(spark, morDst).get.version == dstVersion,
+      "the refused batch must commit nothing to the sink")
+    assert(ids(morDst) == (1L to 20L))
   }
 
   test("sink refuses non-append output modes and a missing identity") {

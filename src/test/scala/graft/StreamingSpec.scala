@@ -649,67 +649,6 @@ class StreamingSpec extends SparkSpec {
     assert(idx == firstRun, s"index=$idx diverged after replay")
   }
 
-  /** r11 (VERDICT r10 #6): the manifest→manifest tail pipeline — resume
-    * from the destination's txn watermark (no checkpoint store), version-
-    * granular exactly-once, all-dropped batches converge, and a rewrite
-    * on the source surfaces as a LOUD failure, never a silent double-read.
-    */
-  test("tailStream: manifest→transform→manifest exactly-once; rewrite mid-stream refuses") {
-    val M = graft.sources.ManifestStore
-    val work = java.nio.file.Files.createTempDirectory("graft-tail").toString
-    val (src, dst) = (s"$work/src", s"$work/dst")
-    def batch(lo: Int, hi: Int) =
-      (lo until hi).map(i => (i.toLong, s"doc-$i")).toDF("id", "text")
-    val xform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      _.withColumn("tokens", size(split(col("text"), "-")))
-
-    // bootstrap: first batch is the FULL current snapshot
-    M.append(spark, batch(0, 10), src)
-    assert(M.tailStream(spark, src, dst, "tail", xform) == 1L)
-    assert(M.read(spark, dst).count() == 10L)
-    assert(M.read(spark, dst).columns.contains("tokens"))
-
-    // two more source versions; a fresh call resumes from the destination
-    // watermark (the restart path) and folds both into one batch
-    M.append(spark, batch(10, 20), src)
-    M.append(spark, batch(20, 30), src)
-    assert(M.tailStream(spark, src, dst, "tail", xform) == 3L)
-    assert(M.read(spark, dst).select("id").as[Long].collect().sorted.toSeq
-      == (0L until 30L))
-
-    // idle tick: nothing new — no commit, no duplicates
-    val vBefore = M.latestSnapshot(spark, dst).get.version
-    assert(M.tailStream(spark, src, dst, "tail", xform, pollMs = 1L) == 3L)
-    assert(M.latestSnapshot(spark, dst).get.version == vBefore)
-
-    // an all-dropped batch appends nothing and re-diffs next tick,
-    // converging to the same empty result (watermark intentionally lags)
-    M.append(spark, batch(30, 35), src)
-    val dropAll: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      df => xform(df).where(col("id") < 0)
-    assert(M.tailStream(spark, src, dst, "tail", dropAll, pollMs = 1L) == 4L)
-    assert(M.tailStream(spark, src, dst, "tail", dropAll, pollMs = 1L) == 4L)
-    assert(M.read(spark, dst).count() == 30L, "dropped batch must add nothing")
-
-    // r12: a compaction on the source is PHYSICAL (op-labeled,
-    // row-conserving) — the tail streams THROUGH it; the never-
-    // watermarked v4 rows fold into the same batch
-    M.append(spark, batch(35, 40), src)
-    M.compact(spark, src, targetFileBytes = 1L << 30)
-    assert(M.tailStream(spark, src, dst, "tail", xform, pollMs = 1L) == 6L)
-    assert(M.read(spark, dst).select("id").as[Long].collect().sorted.toSeq
-      == (0L until 40L), "compaction must be transparent to the tail")
-    // a DATA-CHANGING rewrite (CoW delete) still fails loudly, not
-    // double-read
-    M.append(spark, batch(40, 45), src)
-    assert(M.deleteWhere(spark, src,
-      Seq(org.apache.spark.sql.sources.EqualTo("id", 1L)))._1 == 1L)
-    val e = intercept[IllegalArgumentException] {
-      M.tailStream(spark, src, dst, "tail", xform, pollMs = 1L)
-    }
-    assert(e.getMessage.contains("not derivable"), e.getMessage)
-  }
-
   test("session windows merge events within the gap (batch semantics check)") {
     val out = EventStreams.sessionAgg(sample.toDF())
       .select("user_id", "n").as[(Long, Long)].collect().toSet
