@@ -1254,12 +1254,19 @@ object ManifestStore {
     * keys come out physical automatically. Physical names are immutable
     * (renames only move logical labels), so a rename racing this write
     * cannot invalidate the names the files were written under.
+    *
+    * `audit` runs on the written entries once the write has returned
+    * normally: false deletes the batch directory and returns no entries
+    * (nothing to commit); a throw deletes it and propagates, like a
+    * constraint refusal.
     */
   private def writeBatch(fs: FileSystem, root: Path, dfLogical: DataFrame,
                          partitionByLogical: Seq[String],
                          internalRewrite: Boolean = false,
                          colMap: Map[String, String],
-                         constraints: Seq[Constraint] = Nil): Seq[ManifestEntry] = {
+                         constraints: Seq[Constraint] = Nil,
+                         audit: Seq[ManifestEntry] => Boolean = _ => true)
+      : Seq[ManifestEntry] = {
     def phys(n: String): String = colMap.getOrElse(n, n)
     // constraints enforce on the LOGICAL frame (their targets/exprs speak
     // logical names), INSIDE the write pass — one distributed scan, no
@@ -1303,7 +1310,12 @@ object ManifestStore {
         "indistinguishable from a nested path in parquet addressing and in " +
         "pushed filters; rename them before writing to a manifest table")
     val batch = new Path(dataDir(root), s"batch-${UUID.randomUUID()}")
+    // nothing was committed: vacuum owes nothing
+    def discard(): Unit =
+      try fs.delete(batch, true): Unit catch { case scala.util.control.NonFatal(_) => () }
     val writer = df.write.mode(SaveMode.ErrorIfExists)
+    val sc = df.sparkSession.sparkContext
+    sc.addJobTag(batch.getName)
     try (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
       .parquet(batch.toString)
     catch {
@@ -1311,19 +1323,21 @@ object ManifestStore {
         // a constraint refusal rides out of the task as a wrapped
         // RuntimeException — find our tag in the cause chain and rethrow
         // it as the ONE loud, nameable cause (the partial batch directory
-        // is deleted: nothing was committed, vacuum owes nothing)
+        // is deleted once the failed job's other tasks have ended: they
+        // are killed asynchronously and would re-create it)
         val msg = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
           .map(t => Option(t.getMessage).getOrElse(""))
           .find(_.contains(ConstraintTag))
         msg match {
           case Some(m) =>
-            try fs.delete(batch, true) catch { case scala.util.control.NonFatal(_) => () }
+            awaitTasksEnded(sc, batch.getName)
+            discard()
             throw new IllegalStateException(
               m.substring(m.indexOf(ConstraintTag)) +
                 " — the write was refused; no version was committed", e)
           case None => throw e
         }
-    }
+    } finally sc.removeJobTag(batch.getName)
     val files = {
       val it = fs.listFiles(batch, true)
       val buf = Seq.newBuilder[FileStatus]
@@ -1336,7 +1350,7 @@ object ManifestStore {
     val dataSchema = StructType(df.schema.fields.filterNot(f => partitionBy.contains(f.name)))
     val harvested = harvestStats(new org.apache.hadoop.conf.Configuration(fs.getConf),
       files.map(_.getPath), dataSchema)
-    files.map { st =>
+    val entries = files.map { st =>
       val (rows, stats) = harvested(st.getPath.toString)
       val part = if (partitionBy.isEmpty) None
         else Some(partitionOf(batch, st.getPath, partitionBy))
@@ -1345,6 +1359,19 @@ object ManifestStore {
       // the stored string must round-trip through new Path(s) exactly
       ManifestEntry(st.getPath.toString, st.getLen, rows, stats, part)
     }
+    val keep = try audit(entries) catch { case e: Throwable => discard(); throw e }
+    if (keep) entries else { discard(); Seq.empty }
+  }
+
+  /** Wait, at most 30 s, until no task of the jobs tagged `tag` is still
+    * running, as far as the status store has heard.
+    */
+  private def awaitTasksEnded(sc: org.apache.spark.SparkContext, tag: String): Unit = {
+    val st = sc.statusTracker
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    def running: Boolean = st.getJobIdsForTag(tag).iterator.flatMap(st.getJobInfo(_))
+      .flatMap(_.stageIds).flatMap(st.getStageInfo(_)).exists(_.numActiveTasks > 0)
+    while (running && System.nanoTime() < deadline) Thread.sleep(20)
   }
 
   /** Pooled footer-stats harvest (metadata-only round-trips, cost scales
@@ -2429,10 +2456,12 @@ object ManifestStore {
 
   /** [[relationFor]] without the no-files refusal — scans of an entry
     * SUBSET (a pruned or dv-split slice) and the zero-file relation of a
-    * registered table go through here.
+    * registered table go through here. `splittable = false` reads each
+    * file in one task (the merge-on-read identity scans).
     */
   private def relationWith(spark: SparkSession, root: String, snap: Snapshot,
-                           applyDvInPlanner: Boolean = false)
+                           applyDvInPlanner: Boolean = false,
+                           splittable: Boolean = true)
       : org.apache.spark.sql.execution.datasources.HadoopFsRelation = {
     val (_, rootP) = fsFor(spark, root)
     val schema = tableSchemaOf(snap)
@@ -2452,9 +2481,9 @@ object ManifestStore {
       dataSchema = dataSchema,
       bucketSpec = None,
       fileFormat =
-        if (dataMap.isEmpty)
+        if (dataMap.isEmpty && splittable)
           new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-        else new MappedParquetFileFormat(dataMap),
+        else new MappedParquetFileFormat(dataMap, splittable),
       options = Map.empty[String, String])(spark)
   }
 
@@ -2740,7 +2769,9 @@ object ManifestStore {
     * single scan with zero per-row dv cost. `keepIdentity` keeps per-row
     * identity columns (`md5(_metadata.file_path)`,
     * `_metadata.row_index`) on every row — the merge-on-read ops compute
-    * new positions through them; otherwise they never materialize.
+    * new positions through them; otherwise they never materialize — and
+    * reads each file in exactly one task, so [[writeDvAndTag]] builds a
+    * file's vector where it was scanned.
     * Output column order is the table schema's (partition columns in
     * place, not hive-last — the library contract).
     */
@@ -2770,7 +2801,7 @@ object ManifestStore {
       .withColumn(PosCol, col("_metadata.row_index"))
     def scanOf(es: Seq[ManifestEntry]): DataFrame = {
       val df = spark.baseRelationToDataFrame(
-        relationWith(spark, root, snap.copy(files = es)))
+        relationWith(spark, root, snap.copy(files = es), splittable = !keepIdentity))
       if (keepIdentity) withIdentity(df) else df
     }
     val base: DataFrame =
@@ -3327,14 +3358,18 @@ object ManifestStore {
     }
   }
 
-  /** The shared deletion-vector WRITE of [[deleteMorFrom]] and
-    * [[upsertMorFrom]]: `del` = (fkey, pos) of the rows to delete, over
-    * LIVE rows of `touched` only. Each touched file's positions pack into
-    * ONE compressed [[DvBitmap]], merged with the file's OLD vector, and
-    * the per-fkey task writes it as the one-row dv file
-    * `dv-<uuid>/fk=<fkey>/part-<task attempt>.parquet` itself
-    * ([[DvBitmap.writeFile]]) and returns `(fkey, file, n)` — ONE Spark
-    * job; the driver collects only those small rows, never a bitmap. A
+  /** The shared deletion-vector WRITE of the merge-on-read ops: `del` =
+    * (fkey, pos) of the rows to delete, over LIVE rows of `touched` only,
+    * partitioned so that every fkey sits in ONE task — the identity scan
+    * reads each file in one task ([[snapshotFrame]] with `keepIdentity`),
+    * and a frame past a shuffle must be repartitioned by fkey. Each task
+    * groups its rows by fkey, packs each file's positions into ONE
+    * compressed [[DvBitmap]] merged with the file's OLD vector, writes it
+    * as the one-row dv file `dv-<uuid>/fk=<fkey>/part-<task attempt>.parquet`
+    * itself ([[DvBitmap.writeFile]]) and returns `(fkey, file, n)` — ONE
+    * Spark job with no shuffle; the driver collects only those small rows,
+    * never a bitmap, and refuses an fkey that came back from two tasks (a
+    * split file would otherwise lose the other task's positions). A
     * failed or speculative attempt leaves a file no manifest references
     * (vacuum removes it with the dir). Old vectors come from the cached
     * broadcast the touched-slice scan in `del` has just built for the
@@ -3360,18 +3395,29 @@ object ManifestStore {
     import sp.implicits._
     val written: Array[(String, String, Long)] =
       try del.select(col("fkey"), col("pos")).as[(String, Long)]
-        .groupByKey(_._1)
-        .mapGroups { (fk, it) =>
-          var bm = DvBitmap.build(it.map(_._2).toArray)
-          for (p <- oldPathOf.get(fk); bc <- oldBc;
-               old <- bc.value.get(org.apache.spark.unsafe.types.UTF8String.fromString(p)))
-            bm = DvBitmap.union(bm, old)
-          val file = new Path(s"$dvDir/fk=$fk",
-            s"part-${org.apache.spark.TaskContext.get().taskAttemptId()}.parquet")
-          DvBitmap.writeFile(confBc.value.value, file, fk, bm)
-          (fk, file.toString, bm.cardinality)
+        .mapPartitions { it =>
+          val byFkey = scala.collection.mutable.LinkedHashMap
+            .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+          it.foreach { case (fk, pos) =>
+            byFkey.getOrElseUpdate(fk, new scala.collection.mutable.ArrayBuilder.ofLong) += pos
+          }
+          val attempt = org.apache.spark.TaskContext.get().taskAttemptId()
+          byFkey.iterator.map { case (fk, positions) =>
+            var bm = DvBitmap.build(positions.result())
+            for (p <- oldPathOf.get(fk); bc <- oldBc;
+                 old <- bc.value.get(org.apache.spark.unsafe.types.UTF8String.fromString(p)))
+              bm = DvBitmap.union(bm, old)
+            val file = new Path(s"$dvDir/fk=$fk", s"part-$attempt.parquet")
+            DvBitmap.writeFile(confBc.value.value, file, fk, bm)
+            (fk, file.toString, bm.cardinality)
+          }
         }.collect()
       finally confBc.destroy()
+    val split = written.groupBy(_._1).collect { case (fk, rs) if rs.length > 1 => fk }
+    require(split.isEmpty,
+      s"deletion-vector write under $root: file(s) with fkey ${split.take(3)} came " +
+        "back from more than one task — their positions would be split across " +
+        "vectors; refusing rather than keep only one task's deletions")
     val totals = written.map { case (fk, _, n) => fk -> n }.toMap
     val fileOf = written.map { case (fk, f, _) => fk -> f }.toMap
     val byFkey = touched.map(e => fkeyOf(e) -> e).toMap
@@ -3461,7 +3507,7 @@ object ManifestStore {
     * against appends at the caller when key uniqueness matters.
     * Above `maxProbeKeys` distinct keys the exact key-set probe is off,
     * but file candidacy still prunes by the update batch's per-column key
-    * RANGE (min/max from the audit agg — distributed, no collect), so a
+    * RANGE (min/max observed on the batch's write, no collect), so a
     * clustered bulk update rewrites its slice, not the table; only a
     * genuinely full-range key set pays the full-table join rewrite.
     */
@@ -3489,17 +3535,17 @@ object ManifestStore {
     prepareUpsert(spark, root, before, updates, keyCols, maxProbeKeys,
       maxRetries, tornGraceMs, txn, extraTxns) match {
       case Left(done) => done
-      case Right(p) => upsertCowTail(spark, root, before, updates, keyCols,
-        maxProbeKeys, maxRetries, tornGraceMs, p, txn, extraTxns)
+      case Right(p) => upsertCowTail(spark, root, before, keyCols,
+        maxRetries, tornGraceMs, p, txn, extraTxns)
     }
 
   /** Everything [[upsertFrom]] and [[upsertMorFrom]] share: validation,
-    * the one-pass audit, probe-key pruning and the updates batch write.
-    * Left = the operation already completed (empty updates, or a pure
-    * insert with no candidate file — committed here); Right = the
-    * matched-key tail remains.
+    * the audited write of the updates batch ([[auditedWrite]]) and
+    * probe-key pruning. Left = the operation already completed (empty
+    * updates, or a pure insert with no candidate file — committed here);
+    * Right = the matched-key tail remains.
     */
-  private final case class UpsertPrep(upd: StructType, keyRows: Array[Row],
+  private final case class UpsertPrep(keyRows: Option[Seq[Row]],
                                       touched: Seq[ManifestEntry],
                                       mineUpdates: Seq[ManifestEntry])
 
@@ -3527,93 +3573,32 @@ object ManifestStore {
       s"updates must carry the table's partition columns ${before.partCols}")
     if (before.partCols.nonEmpty)
       requirePartitionable(updates, before.partCols) // incl. the ""-is-NULL-sentinel guard
-    val keyExprs = keyCols.map(c => col(quoteIdent(c)))
-    // one pass over updates: size, null keys, key uniqueness, and each key
-    // column's min/max (the over-cap pruning summary — distributed, no
-    // collect). A null key never anti-joins (NULL = NULL is not true), so
-    // it would silently INSERT next to whatever it "updated"; duplicate
-    // keys would insert several rows per key where MERGE promises
-    // replacement — both refuse loudly (Delta MERGE errors on multi-match
-    // sources the same way).
-    // r15 (guide §1.2 step 2): the audit and the bounded key enumeration
-    // used to be TWO full passes over `updates` (an agg head() plus a
-    // distinct-limit collect) — at fixture scale each pass is mostly
-    // fixed planning/scheduling cost, and the o-family lifecycle entries
-    // pay it per commit. One grouped pass now serves both: per-key row
-    // counts, capped at maxProbeKeys+1 groups. When the cap is NOT hit
-    // the group set is complete, so row count, null-key count and
-    // per-key uniqueness all derive locally from it (bounded driver
-    // rows, same refusal messages); only an over-cap update set falls
-    // back to the old aggregate pass (whose min/max the range pruning
-    // needs anyway) — same two passes it always cost.
-    var overCapAudit: Option[Row] = None
-    val grouped = updates.groupBy(keyExprs: _*)
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("__cnt"))
-      .limit(maxProbeKeys + 1).collect()
-    val overCap = grouped.length > maxProbeKeys
-    val nKeys = keyCols.length
-    val (updCount, nullKeyRows, distinctKeys) =
-      if (overCap) {
-        val auditAggs =
-          org.apache.spark.sql.functions.count(lit(1)).as("n") +:
-          org.apache.spark.sql.functions.sum(
-            org.apache.spark.sql.functions.when(
-              keyExprs.map(_.isNull).reduce(_ || _), 1L).otherwise(0L)).as("nullkeys") +:
-          org.apache.spark.sql.functions.countDistinct(keyExprs.head, keyExprs.tail: _*)
-            .as("d") +:
-          keyExprs.flatMap(e => Seq(org.apache.spark.sql.functions.min(e),
-            org.apache.spark.sql.functions.max(e)))
-        val auditRow = updates.agg(auditAggs.head, auditAggs.tail: _*).head()
-        overCapAudit = Some(auditRow)
-        (auditRow.getLong(0), auditRow.getLong(1), auditRow.getLong(2))
-      } else {
-        val n = grouped.map(_.getLong(nKeys)).sum
-        val nulls = grouped.iterator
-          .filter(r => (0 until nKeys).exists(r.isNullAt))
-          .map(_.getLong(nKeys)).sum
-        // countDistinct semantics: distinct fully-non-null key tuples
-        (n, nulls, (grouped.length - grouped.count(r => (0 until nKeys).exists(r.isNullAt))).toLong)
-      }
-    if (updCount == 0L) return Left((0L, 0, before.version))
-    require(nullKeyRows == 0L,
-      s"upsertByKey: $nullKeyRows update row(s) carry a NULL key — a null " +
-        "key can never match an existing row, so it would insert instead of update")
-    require(distinctKeys == updCount,
-      s"upsertByKey: updates hold $updCount rows but only $distinctKeys " +
+    // A null key never anti-joins (NULL = NULL is not true), so it would
+    // silently INSERT next to whatever it "updated"; duplicate keys would
+    // insert several rows per key where MERGE promises replacement — both
+    // refuse loudly (Delta MERGE errors on multi-match sources the same
+    // way).
+    val (mineUpdates, audit) = auditedWrite(spark, fs, rootP, root, before,
+      updates, keyCols, maxProbeKeys,
+      nulls => s"upsertByKey: $nulls update row(s) carry a NULL key — a null " +
+        "key can never match an existing row, so it would insert instead of update",
+      (n, d) => s"upsertByKey: updates hold $n rows but only $d " +
         "distinct keys — several rows per key would all be inserted where MERGE " +
         "promises one replacement; deduplicate the updates first")
-    // bounded driver-side key collection buys the file pruning; per-column
-    // IN sets are a SUPERSET of the key-tuple set, so pruning stays
-    // conservative for multi-column keys
-    val keyRows: Array[Row] =
-      if (overCap) grouped // only the length matters past the cap
-      else grouped.map(r => Row.fromSeq((0 until nKeys).map(r.get)))
-    val touched =
-      if (overCap) {
-        val auditRow = overCapAudit.get
-        // above the probe cap the exact key set is too large to ship, but
-        // file candidacy need not collapse to the whole table (VERDICT r10
-        // wrong-#2): the audit pass already computed each key column's
-        // min/max, and a file whose stats sit wholly outside the update
-        // batch's key RANGE cannot hold a matching key — range filters are
-        // a superset of the key-tuple set, so pruning stays conservative.
-        // A clustered 100k-key update rewrites its slice, not the table.
-        val rangeFilters: Seq[Filter] = keyCols.zipWithIndex.flatMap { case (c, i) =>
-          (Option(auditRow.get(3 + 2 * i)), Option(auditRow.get(4 + 2 * i))) match {
-            case (Some(mn), Some(mx)) =>
-              Seq(GreaterThanOrEqual(c, mn), LessThanOrEqual(c, mx))
-            case _ => Seq.empty // cannot happen: null keys refused above
-          }
-        }
-        prunedEntries(before, rangeFilters)
-      } else {
-        val perCol: Seq[Filter] = keyCols.zipWithIndex.map { case (c, i) =>
-          In(c, keyRows.map(_.get(i)).distinct)
-        }
-        prunedEntries(before, perCol)
+      .getOrElse(return Left((0L, 0, before.version)))
+    // under the cap the exact key tuples prune by per-column IN sets (a
+    // SUPERSET of the key-tuple set, so pruning stays conservative for
+    // multi-column keys). Past it the exact key set is too large to ship,
+    // but file candidacy need not collapse to the whole table (VERDICT
+    // r10 wrong-#2): a file whose stats sit wholly outside the batch's
+    // observed key RANGE cannot hold a matching key. A clustered
+    // 100k-key update rewrites its slice, not the table.
+    val touched = prunedEntries(before, audit.keyRows match {
+      case Some(ks) => keyCols.zipWithIndex.map { case (c, i) =>
+        In(c, ks.map(_.get(i)).distinct.toArray)
       }
-    val mineUpdates = writeBatch(fs, rootP, updates, before.partCols,
-      colMap = before.colMap, constraints = before.constraints)
+      case None => audit.ranges
+    })
     if (touched.isEmpty) {
       // pure insert: no existing file can hold a matching key
       val v = commitReplacing(fs, rootP, Map.empty, mineUpdates, before,
@@ -3621,37 +3606,175 @@ object ManifestStore {
         txn = txn, extraTxns = extraTxns)
       return Left((0L, 0, v))
     }
-    Right(UpsertPrep(upd, keyRows, touched, mineUpdates))
+    Right(UpsertPrep(audit.keyRows, touched, mineUpdates))
   }
 
-  /** The exact key-tuple side of the match (the pruning above is only a
-    * superset). Under the probe cap the keys are ALREADY on the driver —
-    * a local frame broadcasts without re-evaluating the updates plan; an
-    * over-cap update set joins plain, never via a driver collect.
+  /** What the merge audit learned from the updates batch's write: the
+    * distinct key tuples when there are at most `maxProbeKeys` of them
+    * (None past the cap), and each key column's observed min/max as range
+    * filters (the over-cap pruning).
     */
-  private def upsertKeysSide(spark: SparkSession, updates: DataFrame,
-                             keyCols: Seq[String], maxProbeKeys: Int,
-                             p: UpsertPrep): DataFrame =
-    if (p.keyRows.length > maxProbeKeys)
-      updates.select(keyCols.map(c => col(quoteIdent(c))): _*).distinct()
-    else {
-      import scala.jdk.CollectionConverters._
-      val keySchema = StructType(keyCols.map(c => p.upd(p.upd.fieldIndex(c))))
-      org.apache.spark.sql.functions.broadcast(
-        spark.createDataFrame(p.keyRows.toSeq.asJava, keySchema))
+  private final case class KeyAudit(keyRows: Option[Seq[Row]], ranges: Seq[Filter])
+
+  /** Write `updates` as a new batch with the MERGE audit riding the same
+    * write: a `Dataset.observe` on the batch computes its row count, its
+    * NULL-key rows, each key column's min/max and its distinct key tuples
+    * ([[KeyTuples]], capped at `maxProbeKeys + 1`), so the audit checks
+    * the very rows written and costs no pass of its own. Only an over-cap
+    * batch needs one more pass: its exact distinct-key count, read back
+    * from the written files. A refused audit deletes the batch directory
+    * and throws `nullKeys` / `dupKeys`, like a constraint refusal; an
+    * empty batch is deleted too and returns None (nothing to commit).
+    * The metrics are awaited only after the write returned normally — on
+    * a failed write they never arrive.
+    */
+  private def auditedWrite(spark: SparkSession, fs: FileSystem, rootP: Path,
+                           root: String, before: Snapshot, updates: DataFrame,
+                           keyCols: Seq[String], maxProbeKeys: Int,
+                           nullKeys: Long => String, dupKeys: (Long, Long) => String)
+      : Option[(Seq[ManifestEntry], KeyAudit)] = {
+    val F = org.apache.spark.sql.functions
+    val keyExprs = keyCols.map(c => col(quoteIdent(c)))
+    val table = tableSchemaOf(before)
+    val keySchema = StructType(keyCols.map(c => table(c).copy(nullable = true)))
+    val keyTuples = F.udaf(new KeyTuples(maxProbeKeys, keySchema),
+      org.apache.spark.sql.Encoders.row(keySchema))
+    val aggs = Seq(F.count(lit(1)).as("n"),
+      F.count(F.when(keyExprs.map(_.isNull).reduce(_ || _), lit(1))).as("nullkeys"),
+      keyTuples(keyExprs: _*).as("keys")) ++
+      keyExprs.zipWithIndex.flatMap { case (e, i) =>
+        Seq(F.min(e).as(s"min$i"), F.max(e).as(s"max$i")) }
+    val name = s"graft-merge-audit-${UUID.randomUUID()}"
+    var audit: Option[KeyAudit] = None
+    val written = ObservedWrites.around(updates.sparkSession, name) { metrics =>
+      writeBatch(fs, rootP, updates.observe(name, aggs.head, aggs.tail: _*),
+        before.partCols, colMap = before.colMap, constraints = before.constraints,
+        audit = { entries =>
+          val m = metrics()
+          val n = m.getAs[Long]("n")
+          if (n > 0L) {
+            val nulls = m.getAs[Long]("nullkeys")
+            require(nulls == 0L, nullKeys(nulls))
+            val tuples = m.getAs[Row]("keys").getSeq[Row](0)
+            val overCap = tuples.size > maxProbeKeys
+            val distinct =
+              if (!overCap) tuples.size.toLong
+              else batchFrame(spark, root, before, entries).select(keyExprs: _*)
+                .distinct().count()
+            require(distinct == n, dupKeys(n, distinct))
+            audit = Some(KeyAudit(if (overCap) None else Some(tuples),
+              keyCols.zipWithIndex.flatMap { case (c, i) =>
+                Seq(GreaterThanOrEqual(c, m.getAs[Any](s"min$i")),
+                  LessThanOrEqual(c, m.getAs[Any](s"max$i")))
+              }))
+          }
+          audit.isDefined
+        })
     }
+    audit.map(written -> _)
+  }
+
+  /** The observed metrics of audited writes, delivered by name through
+    * the session's query-execution listener bus. Not `Observation`: it
+    * parks a non-serializable `ObservationManager` in a non-transient
+    * field of the session, and from then on any closure that captures
+    * the session (an MLlib model's training summary does) fails with
+    * "Task not serializable". `around` registers the listener for one
+    * write; `metrics()` waits for that write's row — call it only after
+    * the write returned normally, since a failed write delivers none.
+    */
+  private object ObservedWrites extends org.apache.spark.sql.util.QueryExecutionListener {
+    private val pending = new java.util.concurrent.ConcurrentHashMap[
+      String, scala.concurrent.Promise[Row]]()
+    // a bound on the listener bus's delivery, not on the write
+    private val DeliveryTimeout = scala.concurrent.duration.Duration(10, "min")
+
+    override def onSuccess(funcName: String,
+                           qe: org.apache.spark.sql.execution.QueryExecution,
+                           durationNs: Long): Unit =
+      qe.observedMetrics.foreach { case (name, row) =>
+        Option(pending.get(name)).foreach(_.trySuccess(row))
+      }
+
+    override def onFailure(funcName: String,
+                           qe: org.apache.spark.sql.execution.QueryExecution,
+                           exception: Exception): Unit = ()
+
+    def around[T](session: SparkSession, name: String)(write: (() => Row) => T): T = {
+      val promise = scala.concurrent.Promise[Row]()
+      pending.put(name, promise)
+      session.listenerManager.register(this)
+      try write(() =>
+        try scala.concurrent.Await.result(promise.future, DeliveryTimeout)
+        catch { case _: java.util.concurrent.TimeoutException =>
+          throw new IllegalStateException(s"the audit metrics of write $name did not " +
+            s"arrive within $DeliveryTimeout — the write was refused; no version was committed")
+        })
+      finally {
+        session.listenerManager.unregister(this)
+        pending.remove(name)
+      }
+    }
+  }
+
+  /** The exact key match of an upsert or apply over a scan of the table:
+    * under the probe cap an `isin` over the collected key tuples (on
+    * `struct(keyCols)` for a multi-column key) — no join, nothing to
+    * broadcast. NULL on a NULL key, like the join it replaces: callers
+    * decide what NULL means.
+    */
+  private def keyIn(table: StructType, keyCols: Seq[String], keyRows: Seq[Row]): Column = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graftshim.ColumnShim
+    val keySchema = StructType(keyCols.map(c => table(c)))
+    if (keyCols.size == 1)
+      col(quoteIdent(keyCols.head)).isin(keyRows.map(r =>
+        ColumnShim.column(Literal.create(r.get(0), keySchema.head.dataType))): _*)
+    else
+      struct(keyCols.map(c => col(quoteIdent(c))): _*).isin(keyRows.map(r =>
+        ColumnShim.column(Literal.create(r, keySchema))): _*)
+  }
+
+  /** The written batch of an audited write, as the table reads it. */
+  private def batchFrame(spark: SparkSession, root: String, before: Snapshot,
+                         batch: Seq[ManifestEntry]): DataFrame =
+    snapshotFrame(spark, root, before.copy(files = batch), Seq.empty, keepIdentity = false)
+
+  /** (fkey, pos) of the live rows of `touched` whose key matches: the
+    * `isin` predicate under the probe cap (`keyRows`), a semi join
+    * against `keysOverCap` past it. The join's shuffle scatters a file's
+    * rows across tasks, so its positions are regrouped by file for
+    * [[writeDvAndTag]]; the predicate keeps the scan's one-task-per-file
+    * layout.
+    */
+  private def matchedPositions(spark: SparkSession, root: String, before: Snapshot,
+                               touched: Seq[ManifestEntry], keyCols: Seq[String],
+                               keyRows: Option[Seq[Row]], keysOverCap: => DataFrame)
+      : DataFrame = {
+    val rows = snapshotFrame(spark, root, before.copy(files = touched),
+      Seq.empty, keepIdentity = true)
+    val matched = keyRows match {
+      case Some(ks) => rows.where(keyIn(tableSchemaOf(before), keyCols, ks))
+      case None => rows.join(keysOverCap, keyCols, "left_semi").repartition(col(FkeyCol))
+    }
+    matched.select(col(FkeyCol).as("fkey"), col(PosCol).as("pos"))
+  }
 
   private def upsertCowTail(spark: SparkSession, root: String,
-                            before: Snapshot, updates: DataFrame,
-                            keyCols: Seq[String], maxProbeKeys: Int,
+                            before: Snapshot, keyCols: Seq[String],
                             maxRetries: Int, tornGraceMs: Long,
                             p: UpsertPrep,
                             txn: Option[(String, Long)],
                             extraTxns: Map[String, Long]): (Long, Int, Long) = {
     val (fs, rootP) = fsFor(spark, root)
-    val keysSide = upsertKeysSide(spark, updates, keyCols, maxProbeKeys, p)
-    val surviving = readSnapshot(spark, root, before.copy(files = p.touched), Seq.empty)
-      .join(keysSide, keyCols, "left_anti")
+    val touchedRows = readSnapshot(spark, root, before.copy(files = p.touched), Seq.empty)
+    // the anti side keeps NULL-key rows, as the anti join does
+    val surviving = p.keyRows match {
+      case Some(ks) => touchedRows.where(
+        coalesce(not(keyIn(tableSchemaOf(before), keyCols, ks)), lit(true)))
+      case None => touchedRows.join(batchFrame(spark, root, before, p.mineUpdates)
+        .select(keyCols.map(c => col(quoteIdent(c))): _*), keyCols, "left_anti")
+    }
     // zero-row rewrite files (a fully-replaced unpartitioned slice leaves
     // a schema-only part file) are dead weight here — mineUpdates already
     // keeps the manifest non-empty
@@ -3676,8 +3799,9 @@ object ManifestStore {
     * over-cap key ranges), same isolation caveats as [[upsertByKey]];
     * same dv trade-offs as [[deleteWhereMergeOnRead]] (format read
     * refuses until materialization, readAddedSince refuses across the
-    * change). Returns (rowsReplaced, filesTagged, version); -1 on
-    * abandonment.
+    * change). Under the probe cap it runs two SQL executions of one job
+    * each: the audited updates write and the dv step. Returns
+    * (rowsReplaced, filesTagged, version); -1 on abandonment.
     */
   def upsertByKeyMergeOnRead(spark: SparkSession, root: String,
                              updates: DataFrame, keyCols: Seq[String],
@@ -3703,14 +3827,10 @@ object ManifestStore {
       case Left(done) => done
       case Right(p) =>
         val (fs, rootP) = fsFor(spark, root)
-        // LIVE rows of the candidate slice with per-row file identity;
-        // the SEMI join against the exact key tuples yields the positions
-        // to delete — replaced rows never rewrite
-        val touchedRows = snapshotFrame(spark, root,
-          before.copy(files = p.touched), Seq.empty, keepIdentity = true)
-        val keysSide = upsertKeysSide(spark, updates, keyCols, maxProbeKeys, p)
-        val del = touchedRows.join(keysSide, keyCols, "left_semi")
-          .select(col(FkeyCol).as("fkey"), col(PosCol).as("pos"))
+        // the matched live rows' positions — replaced rows never rewrite
+        val del = matchedPositions(spark, root, before, p.touched, keyCols, p.keyRows,
+          batchFrame(spark, root, before, p.mineUpdates)
+            .select(keyCols.map(c => col(quoteIdent(c))): _*))
         writeDvAndTag(spark, rootP, root, p.touched, del) match {
           case None => // no existing row matched: a pure insert after all
             val v = commitReplacing(fs, rootP, Map.empty, p.mineUpdates,
@@ -3729,18 +3849,19 @@ object ManifestStore {
     * `upserts`' keys' rows and REMOVES `deleteKeys`' rows — the
     * replication primitive ([[Materialized.replicate]] folds a versioned
     * change feed through it). Mechanics are [[upsertByKeyMergeOnRead]]'s
-    * with the dv side keyed on the UNION of both key sets: affected
-    * files are pruned by the collected keys (In-sets up to
-    * `maxProbeKeys`; above the cap candidacy degrades to every file),
-    * matched live rows become deletion-vector positions, the upsert
-    * batch appends, and everything lands in one op=mor-upsert version
-    * whose optional `txn` watermark makes redelivery a no-op INSIDE the
-    * commit. Returns (rowsRemoved, filesTagged, version); -1 is either
-    * abandonment (a concurrent rewrite superseded a touched file) or the
-    * idempotent replay — disambiguate via the destination's watermark,
-    * exactly like [[Materialized]]'s merge. NULL delete keys match
-    * nothing (SQL semantics) and are ignored; `upserts` must be
-    * key-unique and NULL-key-free (the MERGE audit).
+    * with the dv side keyed on the UNION of both key sets: the upserts
+    * write through the same audit ([[auditedWrite]]), only `deleteKeys`
+    * is collected, and affected files are pruned by the keys (In-sets up
+    * to `maxProbeKeys`; above the cap candidacy degrades to every file),
+    * matched live rows become deletion-vector positions, and everything
+    * lands in one op=mor-upsert version whose optional `txn` watermark
+    * makes redelivery a no-op INSIDE the commit. Returns (rowsRemoved,
+    * filesTagged, version); -1 is either abandonment (a concurrent
+    * rewrite superseded a touched file) or the idempotent replay —
+    * disambiguate via the destination's watermark, exactly like
+    * [[Materialized]]'s merge. NULL delete keys match nothing (SQL
+    * semantics) and are ignored; `upserts` must be key-unique and
+    * NULL-key-free (the MERGE audit). Empty `upserts` commit no data file.
     */
   def applyByKeyMergeOnRead(spark: SparkSession, root: String,
                             upserts: DataFrame, deleteKeys: DataFrame,
@@ -3769,62 +3890,40 @@ object ManifestStore {
       s"upserts must carry the table's partition columns ${before.partCols}")
     if (before.partCols.nonEmpty) requirePartitionable(upserts, before.partCols)
     val keyExprs = keyCols.map(c => col(quoteIdent(c)))
-    // the MERGE audit over the upsert side (one pass)
-    val auditRow = upserts.agg(
-      org.apache.spark.sql.functions.count(lit(1)).as("n"),
-      org.apache.spark.sql.functions.sum(
-        org.apache.spark.sql.functions.when(
-          keyExprs.map(_.isNull).reduce(_ || _), 1L).otherwise(0L)).as("nullkeys"),
-      org.apache.spark.sql.functions.countDistinct(keyExprs.head, keyExprs.tail: _*)
-        .as("d")).head()
-    val updCount = auditRow.getLong(0)
-    if (updCount > 0L) {
-      require(auditRow.getLong(1) == 0L,
-        s"apply: ${auditRow.getLong(1)} upsert row(s) carry a NULL key")
-      require(auditRow.getLong(2) == updCount,
-        s"apply: upserts hold $updCount rows but only ${auditRow.getLong(2)} " +
-          "distinct keys — deduplicate first (one replacement per key)")
-    }
+    val written = auditedWrite(spark, fs, rootP, root, before, upserts, keyCols,
+      maxProbeKeys,
+      nulls => s"apply: $nulls upsert row(s) carry a NULL key",
+      (n, d) => s"apply: upserts hold $n rows but only $d " +
+        "distinct keys — deduplicate first (one replacement per key)")
+    val mineUpdates = written.map(_._1).getOrElse(Seq.empty)
     val delK = deleteKeys.select(keyExprs: _*)
       .where(keyExprs.map(_.isNotNull).reduce(_ && _)).distinct()
-    val allKeys = upserts.select(keyExprs: _*).distinct().unionByName(delK).distinct()
-    val keyRows = allKeys.limit(maxProbeKeys + 1).collect()
-    if (updCount == 0L && keyRows.isEmpty) return (0L, 0, before.version)
-    val touched =
-      if (keyRows.length > maxProbeKeys) before.files
-      else prunedEntries(before, keyCols.zipWithIndex.map { case (c, i) =>
-        In(c, keyRows.map(_.get(i)).distinct)
-      })
-    val mineUpdates =
-      if (updCount == 0L) Seq.empty
-      else writeBatch(fs, rootP, upserts, before.partCols, colMap = before.colMap,
-        constraints = before.constraints)
-    if (touched.isEmpty) { // nothing to remove: a pure insert
-      if (mineUpdates.isEmpty) return (0L, 0, before.version) // full no-op
-      val v = commitReplacing(fs, rootP, Map.empty, mineUpdates, before,
-        maxRetries, tornGraceMs, refuseEmpty = false, op = "mor-upsert",
-        txn = txn, extraTxns = extraTxns)
-      return (0L, 0, v)
+    val delRows = delK.limit(maxProbeKeys + 1).collect().toSeq
+    if (written.isEmpty && delRows.isEmpty) return (0L, 0, before.version)
+    // the exact key set of both sides, None past the probe cap
+    val keyRows: Option[Seq[Row]] = written match {
+      case Some((_, KeyAudit(None, _))) => None
+      case _ =>
+        val all = written.flatMap(_._2.keyRows).getOrElse(Seq.empty) ++ delRows
+        if (all.distinct.length > maxProbeKeys) None else Some(all)
     }
-    val touchedRows = snapshotFrame(spark, root,
-      before.copy(files = touched), Seq.empty, keepIdentity = true)
-    val keysSide =
-      if (keyRows.length > maxProbeKeys) allKeys
-      else {
-        import scala.jdk.CollectionConverters._
-        val keySchema = StructType(keyCols.map(c => table(table.fieldIndex(c))))
-        org.apache.spark.sql.functions.broadcast(
-          spark.createDataFrame(keyRows.toSeq.asJava, keySchema))
-      }
-    val del = touchedRows.join(keysSide, keyCols, "left_semi")
-      .select(col(FkeyCol).as("fkey"), col(PosCol).as("pos"))
+    val touched = keyRows match {
+      case None => before.files
+      case Some(ks) => prunedEntries(before, keyCols.zipWithIndex.map { case (c, i) =>
+        In(c, ks.map(_.get(i)).distinct.toArray)
+      })
+    }
+    def pureInsert(): (Long, Int, Long) =
+      if (mineUpdates.isEmpty) (0L, 0, before.version) // full no-op
+      else (0L, 0, commitReplacing(fs, rootP, Map.empty, mineUpdates, before,
+        maxRetries, tornGraceMs, refuseEmpty = false, op = "mor-upsert",
+        txn = txn, extraTxns = extraTxns))
+    if (touched.isEmpty) return pureInsert() // nothing to remove
+    val del = matchedPositions(spark, root, before, touched, keyCols, keyRows,
+      if (mineUpdates.isEmpty) delK
+      else batchFrame(spark, root, before, mineUpdates).select(keyExprs: _*).unionByName(delK))
     writeDvAndTag(spark, rootP, root, touched, del) match {
-      case None => // no existing row matched any key: a pure insert
-        if (mineUpdates.isEmpty) return (0L, 0, before.version) // full no-op
-        val v = commitReplacing(fs, rootP, Map.empty, mineUpdates, before,
-          maxRetries, tornGraceMs, refuseEmpty = false, op = "mor-upsert",
-          txn = txn, extraTxns = extraTxns)
-        (0L, 0, v)
+      case None => pureInsert() // no existing row matched any key
       case Some((tagged, replacedSig, removed)) =>
         val v = commitReplacing(fs, rootP, replacedSig, tagged ++ mineUpdates,
           before, maxRetries, tornGraceMs, refuseEmpty = false,

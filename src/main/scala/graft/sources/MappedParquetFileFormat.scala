@@ -24,9 +24,15 @@ import org.apache.spark.sql.types.StructType
   * Filters on unmapped names pass through: parquet pushdown ignores
   * predicates on columns absent from a file's schema, so an unrenamed
   * residual costs pruning, never correctness.
+  *
+  * `splittable = false` reads every file in exactly ONE task (`colMap`
+  * may then be empty): the merge-on-read scans build each touched
+  * file's deletion vector inside the task that read the file, with no
+  * shuffle — a file larger than a split costs that scan its parallelism.
   */
 private[sources] class MappedParquetFileFormat(
-    private val colMap: Map[String, String]) extends ParquetFileFormat {
+    private val colMap: Map[String, String],
+    private val splittable: Boolean = true) extends ParquetFileFormat {
 
   private def phys(st: StructType): StructType =
     StructType(st.fields.map(f => f.copy(name = colMap.getOrElse(f.name, f.name))))
@@ -44,13 +50,18 @@ private[sources] class MappedParquetFileFormat(
       filters.map(ManifestStats.renameFilter(_, n => colMap.getOrElse(n, n))),
       options, hadoopConf)
 
+  override def isSplitable(sparkSession: SparkSession, options: Map[String, String],
+                           path: org.apache.hadoop.fs.Path): Boolean =
+    splittable && super.isSplitable(sparkSession, options, path)
+
   // plan/exchange reuse compares file formats: two mapped scans are
-  // interchangeable iff their mappings agree (the stock class compares by
-  // type only, which would let a mapped and an unmapped scan unify)
+  // interchangeable iff their mappings and split modes agree (the stock
+  // class compares by type only, which would let a mapped and an
+  // unmapped scan unify)
   override def equals(other: Any): Boolean = other match {
-    case m: MappedParquetFileFormat => m.colMap == colMap
+    case m: MappedParquetFileFormat => m.colMap == colMap && m.splittable == splittable
     case _ => false
   }
-  override def hashCode(): Int = colMap.hashCode()
+  override def hashCode(): Int = (colMap, splittable).hashCode()
   override def toString: String = "MappedParquet"
 }

@@ -1876,29 +1876,274 @@ class ManifestStoreSpec extends SparkSpec {
   }
 
   /** The dv step's Spark work is pinned as a COUNT (stable on a noisy
-    * host): a merge-on-read delete on a file that already carries a
-    * vector runs as ONE SQL execution — the scan plus the per-fkey task
-    * that writes the dv file — and loading the old vector (from the dv
-    * file on the driver, for the scan's broadcast; reused by the write)
-    * starts no job of its own.
+    * host), and every job must run inside a SQL execution: a
+    * merge-on-read delete is ONE job — the scan and the per-task dv
+    * write, no shuffle — on a clean file and on a file that already
+    * carries a vector (loading the old vector, from the dv file on the
+    * driver, for the scan's broadcast; reused by the write, starts no job).
     */
   test("MoR delete on a dv-carrying file: one SQL execution, old vectors load without a job") {
     import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
     val root = freshRoot()
     ManifestStore.append(spark, batch(0, 100).coalesce(1), root)
-    assert(ManifestStore.deleteWhereMergeOnRead(spark, root, Seq(LessThan("id", 10L)))._1 == 10L)
+    val ((n0, tagged0, _), clean) = org.apache.spark.JobsOf(spark.sparkContext)(
+      ManifestStore.deleteWhereMergeOnRead(spark, root, Seq(LessThan("id", 10L))))
+    assert(n0 == 10L && tagged0 == 1)
+    assert(clean.size == 1 && clean.forall(_.isDefined),
+      s"a delete on a clean file must be ONE job inside a SQL execution: $clean")
     assert(ManifestStore.latestSnapshot(spark, root).get.files.forall(_.dv.exists(_.rows == 10L)))
     val ((n, tagged, _), jobs) = org.apache.spark.JobsOf(spark.sparkContext)(
       ManifestStore.deleteWhereMergeOnRead(spark, root,
         Seq(GreaterThanOrEqual("id", 10L), LessThan("id", 25L))))
     assert(n == 15L && tagged == 1)
-    assert(jobs.nonEmpty && jobs.forall(_.isDefined),
-      s"every job must run inside the dv step's SQL execution: $jobs")
-    assert(jobs.flatten.distinct.size == 1,
-      s"the dv step must be ONE SQL execution, saw ${jobs.flatten.distinct}")
+    assert(jobs.size == 1 && jobs.forall(_.isDefined),
+      s"a delete on a dv-carrying file must be ONE job inside a SQL execution: $jobs")
     assert(ManifestStore.latestSnapshot(spark, root).get.files.map(_.dv.map(_.rows)) ==
       Seq(Some(25L)))
     assert(ids(ManifestStore.read(spark, root)) == (25L until 100L))
+  }
+
+  /** An upsert is two SQL executions of one job each: the updates write,
+    * which carries the key audit, and the dv step with the key match as
+    * a predicate (no broadcast, no join). A SQL UPDATE is the dv step
+    * plus the write of the updated rows. No job runs outside a SQL
+    * execution.
+    */
+  test("MoR upsert: 2 jobs in 2 SQL executions; SQL UPDATE: 2 SQL executions") {
+    import org.apache.spark.sql.sources.LessThan
+    val root = freshRoot()
+    ManifestStore.append(spark, batch(25, 100).coalesce(1), root)
+    def inSql(jobs: Seq[Option[Long]]): Unit =
+      assert(jobs.nonEmpty && jobs.forall(_.isDefined),
+        s"every job must run inside a SQL execution: $jobs")
+    val ((replaced, _, _), upsert) = org.apache.spark.JobsOf(spark.sparkContext)(
+      ManifestStore.upsertByKeyMergeOnRead(spark, root,
+        batch(90, 110).withColumn("payload", lit("new")), Seq("id")))
+    assert(replaced == 10L)
+    inSql(upsert)
+    assert(upsert.size == 2 && upsert.flatten.distinct.size == 2,
+      s"an upsert must be 2 jobs in 2 SQL executions: $upsert")
+    val t = ManifestStore.read(spark, root)
+    assert(ids(t) == (25L until 110L))
+    assert(t.where(col("payload") === "new").count() == 20L)
+
+    val before = ManifestStore.latestSnapshot(spark, root).get
+    val ((updated, _, _), update) = org.apache.spark.JobsOf(spark.sparkContext)(
+      ManifestStore.updateMorExpr(spark, root, before, Seq(LessThan("id", 40L)),
+        col("id") < 40L, Map("payload" -> lit("upd"))))
+    assert(updated == 15L)
+    inSql(update)
+    assert(update.flatten.distinct.size == 2,
+      s"an UPDATE must be 2 SQL executions (dv step, updated rows' write): $update")
+    assert(ManifestStore.read(spark, root).where(col("payload") === "upd").count() == 15L)
+  }
+
+  /** A refused upsert leaves nothing behind, on both paths: today's
+    * message, no version, no batch directory (the audit rides the
+    * updates' write, so the refusal deletes what that write landed) —
+    * and it returns, because the audit's observed metrics are read only
+    * after the write returned normally.
+    */
+  test("refused upserts (NULL key, duplicate key, constraint) commit nothing and leave no batch dir, MoR and CoW") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val root = freshRoot()
+    ManifestStore.append(spark, batch(0, 50).withColumn("grp", lit(1)), root)
+    ManifestStore.addCheckConstraint(spark, root, "grp_domain", "grp BETWEEN 0 AND 3")
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def batchDirs(): Set[String] = fs.listStatus(new Path(root, "data")).map(_.getPath.getName)
+      .filter(_.startsWith("batch-")).toSet
+    val dirs = batchDirs()
+    val version = ManifestStore.latestSnapshot(spark, root).get.version
+    val nullKey = Seq((null.asInstanceOf[java.lang.Long], "a", 1)).toDF("id", "payload", "grp")
+    val dupKey = Seq((1L, "a", 1), (1L, "b", 1), (60L, "c", 1)).toDF("id", "payload", "grp")
+    val violating = Seq((2L, "a", 1), (70L, "b", 9)).toDF("id", "payload", "grp")
+    val upserts: Seq[(String, org.apache.spark.sql.DataFrame => Any)] = Seq(
+      "MoR" -> (u => ManifestStore.upsertByKeyMergeOnRead(spark, root, u, Seq("id"))),
+      "CoW" -> (u => ManifestStore.upsertByKey(spark, root, u, Seq("id"))))
+    for ((path, upsert) <- upserts;
+         (updates, expected) <- Seq(nullKey -> "NULL key", dupKey -> "distinct keys",
+           violating -> "grp_domain")) {
+      val e = intercept[Exception] {
+        Await.result(Future(upsert(updates)), 2.minutes)
+      }
+      assert(!e.isInstanceOf[java.util.concurrent.TimeoutException],
+        s"$path upsert refusing on '$expected' did not return")
+      assert(e.getMessage.contains(expected), s"$path: ${e.getMessage}")
+      assert(ManifestStore.latestSnapshot(spark, root).get.version == version,
+        s"$path refusal on '$expected' committed a version")
+      assert(batchDirs() == dirs,
+        s"$path refusal on '$expected' left batch dirs ${batchDirs() -- dirs}")
+    }
+    assert(intercept[IllegalArgumentException](upserts.head._2(dupKey)).getMessage ==
+      "requirement failed: upsertByKey: updates hold 3 rows but only 2 distinct keys — " +
+        "several rows per key would all be inserted where MERGE promises one " +
+        "replacement; deduplicate the updates first")
+    assert(ids(ManifestStore.read(spark, root)) == (0L until 50L))
+  }
+
+  /** An empty updates frame — a local empty relation, or one the
+    * optimizer folds to empty — writes, observes zero rows, deletes its
+    * batch directory and commits nothing; an apply with empty upserts
+    * commits its deletes and no data file. The observed audit must
+    * still arrive for such a write, or the call would never return.
+    */
+  test("empty updates commit nothing on every merge path and return") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val root = freshRoot()
+    ManifestStore.append(spark, batch(0, 50).coalesce(1), root)
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def batchDirs(): Set[String] = fs.listStatus(new Path(root, "data")).map(_.getPath.getName)
+      .filter(_.startsWith("batch-")).toSet
+    val dirs = batchDirs()
+    val before = ManifestStore.latestSnapshot(spark, root).get
+    def promptly[T](body: => T): T = Await.result(Future(body), 2.minutes)
+    for (empty <- Seq(batch(0, 0), batch(0, 10).where(lit(false)))) {
+      assert(promptly(ManifestStore.upsertByKeyMergeOnRead(spark, root, empty, Seq("id"))) ==
+        ((0L, 0, before.version)))
+      assert(promptly(ManifestStore.upsertByKey(spark, root, empty, Seq("id"))) ==
+        ((0L, 0, before.version)))
+      assert(promptly(ManifestStore.applyByKeyMergeOnRead(spark, root, empty,
+        empty.select("id"), Seq("id"))) == ((0L, 0, before.version)))
+      assert(batchDirs() == dirs, s"an empty upsert left ${batchDirs() -- dirs}")
+    }
+    val (removed, tagged, v) = promptly(ManifestStore.applyByKeyMergeOnRead(spark, root,
+      batch(0, 0), batch(0, 5).select("id"), Seq("id")))
+    assert(removed == 5L && tagged == 1 && v == before.version + 1)
+    assert(batchDirs() == dirs, s"a delete-only apply wrote ${batchDirs() -- dirs}")
+    val after = ManifestStore.latestSnapshot(spark, root).get
+    assert(after.files.map(_.path) == before.files.map(_.path),
+      "a delete-only apply must commit no data file")
+    assert(ids(ManifestStore.read(spark, root)) == (5L until 50L))
+  }
+
+  /** The audit's metrics must not reach the session through
+    * `Observation`: its `ObservationManager` sits in a non-transient
+    * session field and is not serializable, so every later closure that
+    * captures the session (an MLlib model's training summary does) would
+    * fail with "Task not serializable".
+    */
+  test("an audited upsert leaves the session serializable") {
+    val root = freshRoot()
+    ManifestStore.append(spark, batch(0, 20), root)
+    ManifestStore.upsertByKeyMergeOnRead(spark, root,
+      batch(10, 30).withColumn("payload", lit("new")), Seq("id"))
+    ManifestStore.upsertByKey(spark, root, batch(0, 5), Seq("id"))
+    val out = new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream())
+    try out.writeObject(spark) finally out.close()
+  }
+
+  /** The dv step builds each file's vector in the task that scanned it,
+    * so a touched file must never be split across tasks, however small
+    * the split size: a multi-row-group file under a few-KB
+    * `maxPartitionBytes` (which a plain read does split) still gets
+    * exactly one dv file with exact counts.
+    */
+  test("MoR delete and upsert on a split-prone multi-row-group file: one dv file per touched file") {
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
+    val root = freshRoot()
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val oldBlock = hconf.get("parquet.block.size")
+    hconf.setInt("parquet.block.size", 4096)
+    try ManifestStore.append(spark,
+      spark.range(0, 4000).select(col("id"), concat(lit("row-"), col("id").cast("string"))
+        .as("payload")).coalesce(1), root)
+    finally if (oldBlock == null) hconf.unset("parquet.block.size")
+      else hconf.set("parquet.block.size", oldBlock)
+    val file = ManifestStore.latestSnapshot(spark, root).get.files.map(_.path) match {
+      case Seq(f) => f
+      case files => fail(s"expected one data file, got $files")
+    }
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(file), hconf))
+    val rowGroups = try footer.getRowGroups.size finally footer.close()
+    assert(rowGroups > 2, s"the file must have several row groups, has $rowGroups")
+    val key = "spark.sql.files.maxPartitionBytes"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "8k")
+    try {
+      assert(ManifestStore.read(spark, root).rdd.getNumPartitions > 1,
+        "a plain read must split the file, or this test shows nothing")
+      val (n, tagged, v) = ManifestStore.deleteWhereMergeOnRead(spark, root,
+        Seq(GreaterThanOrEqual("id", 100L), LessThan("id", 3900L)))
+      assert(n == 3800L && tagged == 1, s"(n=$n, tagged=$tagged)")
+      val dv = ManifestStore.snapshotAt(spark, root, v).get.files.flatMap(_.dv)
+      assert(dv.map(_.rows) == Seq(3800L), s"$dv")
+      val leaves = new Path(root).getFileSystem(hconf)
+        .listStatus(new Path(dv.head.path).getParent.getParent)
+      assert(leaves.length == 1, s"one fk dir per touched file: ${leaves.map(_.getPath).toSeq}")
+      assert(ids(ManifestStore.read(spark, root)) == ((0L until 100L) ++ (3900L until 4000L)))
+      val (replaced, _, _) = ManifestStore.upsertByKeyMergeOnRead(spark, root,
+        spark.range(3950, 4050).select(col("id"), lit("new").as("payload")), Seq("id"))
+      assert(replaced == 50L)
+      assert(ManifestStore.latestSnapshot(spark, root).get.files
+        .find(_.path == file).flatMap(_.dv).map(_.rows).contains(3850L))
+      val t = ManifestStore.read(spark, root)
+      assert(ids(t) == ((0L until 100L) ++ (3900L until 4050L)))
+      assert(t.where(col("payload") === "new").count() == 100L)
+    } finally old match {
+      case Some(o) => spark.conf.set(key, o)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** Past the probe cap the audit's distinct-key count is one extra pass
+    * over the WRITTEN batch, and pruning falls back to the observed key
+    * range; the key match is a join, whose positions are regrouped by
+    * file before the dv write. Broadcast joins and partition coalescing
+    * are off here, so the join scatters each file's rows across tasks.
+    */
+  test("over-cap MoR upsert and apply: duplicates still refuse, key range still prunes") {
+    val confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try overCapMor()
+    finally old.foreach {
+      case (k, Some(o)) => spark.conf.set(k, o)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def overCapMor(): Unit = {
+    val root = freshRoot()
+    ManifestStore.append(spark,
+      spark.range(0, 4000).select(col("id"), lit("old").as("payload"))
+        .repartitionByRange(8, col("id")).sortWithinPartitions("id"), root)
+    val before = ManifestStore.latestSnapshot(spark, root).get
+    assert(before.files.size == 8)
+    val dup = (0 until 10).map(i => (i.toLong, s"d$i")) :+ ((3L, "again"))
+    val e = intercept[IllegalArgumentException] {
+      ManifestStore.upsertByKeyMergeOnRead(spark, root, dup.toDF("id", "payload"),
+        Seq("id"), maxProbeKeys = 3)
+    }
+    assert(e.getMessage.contains("11 rows but only 10 distinct keys"), e.getMessage)
+    assert(ManifestStore.latestSnapshot(spark, root).get.version == before.version)
+    // 200 distinct keys (cap 3) inside the first slice's range
+    val (replaced, tagged, v) = ManifestStore.upsertByKeyMergeOnRead(spark, root,
+      spark.range(0, 200).select(col("id"), lit("new").as("payload")),
+      Seq("id"), maxProbeKeys = 3)
+    assert(v == before.version + 1 && replaced == 200L, s"(replaced=$replaced, v=$v)")
+    assert(tagged == 1, s"a range-confined over-cap upsert tagged $tagged of 8 files")
+    val t = ManifestStore.read(spark, root)
+    assert(t.count() == 4000L && t.where(col("payload") === "new").count() == 200L)
+    // apply past the cap: upserts and delete keys together
+    val (removed, _, va) = ManifestStore.applyByKeyMergeOnRead(spark, root,
+      spark.range(3990, 4010).select(col("id"), lit("applied").as("payload")),
+      spark.range(100, 110).select(col("id")), Seq("id"), maxProbeKeys = 3)
+    assert(va == v + 1 && removed == 20L, s"(removed=$removed, v=$va)")
+    val t2 = ManifestStore.read(spark, root)
+    assert(ids(t2) == ((0L until 100L) ++ (110L until 4010L)))
+    assert(t2.where(col("payload") === "applied").count() == 20L)
+    val eApply = intercept[IllegalArgumentException] {
+      ManifestStore.applyByKeyMergeOnRead(spark, root, dup.toDF("id", "payload"),
+        spark.range(0, 0).select(col("id")), Seq("id"), maxProbeKeys = 3)
+    }
+    assert(eApply.getMessage.contains("apply: upserts hold 11 rows but only 10 distinct keys"),
+      eApply.getMessage)
   }
 
   /** advice r12: a pathologically stale hint (persistently failing hint
