@@ -38,13 +38,6 @@ package object api {
                   threshold: Double = 0.5): DataFrame =
       operators.Dedup.removeNearDups(df, idCol, textCol, threshold)
 
-    /** Transitive near-dup removal: similarity chains collapse to one
-      * exemplar per connected cluster (min id survives).
-      */
-    def dedupNearTransitive(idCol: String, textCol: String = "text",
-                            threshold: Double = 0.5): DataFrame =
-      operators.Dedup.removeNearDupsTransitive(df, idCol, textCol, threshold)
-
     /** Incremental vetting (E2): treat THIS frame as the new batch and drop
       * rows duplicating `existing` (or an earlier batch row). Pass the
       * stored signature/band indexes for the probe-only-touched-buckets

@@ -198,8 +198,4 @@ object Autoencoder {
                             l2: Double = 1e-4): AeParams =
     NetOps.averageEpochs(data, epochs, seed)(init(cfg, seed))(_.copyOf)(
       (local, rows) => adaGradPass(cfg, local, new AdaGradState(local), rows, lr, batchSize, l2))
-
-  /** Distributed mean reconstruction error (NaN when empty). */
-  def meanScore(data: Dataset[Array[Double]], cfg: AeConfig, p: AeParams): Double =
-    NetOps.meanOf(data, p)((w, x) => score(cfg, w, x))
 }

@@ -21,7 +21,6 @@ trait FlatParams[P <: FlatParams[P]] extends Serializable { self: P =>
   def rebuild(arrs: Seq[Array[Double]]): P
   final def copyOf: P = rebuild(arrays.map(_.clone()))
   final def zeroed: P = rebuild(arrays.map(a => new Array[Double](a.length)))
-  final def addInPlace(o: P): P = addScaledInPlace(o, 1.0)
   /** this += o * s — the averaging axpy. Plain while-loops: the driver
     * runs this once per partition per epoch over every parameter (~430k
     * doubles for the default ConvNet), so boxed Range foreach + a
@@ -36,17 +35,6 @@ trait FlatParams[P <: FlatParams[P]] extends Serializable { self: P =>
       val b = bs(ai)
       var i = 0
       while (i < a.length) { a(i) += b(i) * s; i += 1 }
-      ai += 1
-    }
-    this
-  }
-  final def scaleInPlace(s: Double): P = {
-    val as = arrays
-    var ai = 0
-    while (ai < as.length) {
-      val a = as(ai)
-      var i = 0
-      while (i < a.length) { a(i) *= s; i += 1 }
       ai += 1
     }
     this

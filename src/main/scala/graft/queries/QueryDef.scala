@@ -38,12 +38,6 @@ object QueryDef {
     */
   def pinnedSql(name: String, oracle: String)(run: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, run, Some(oracle.trim), pinnedAtGateSf = true)
-
-  /** Non-SQL-expressible operator (seeded/ML/binary): driver records a
-    * weaker rows-only check.
-    */
-  def rowsOnly(name: String)(run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, run, None)
 }
 
 /** The committed-golden oracle contract (deterministic but not

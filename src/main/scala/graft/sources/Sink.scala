@@ -224,10 +224,14 @@ object Sink {
       allowMissing = false)
   }
 
+  /** Rewrites of one leaf a concurrent writer may invalidate before
+    * [[compactLeaf]] refuses.
+    */
+  private val MaxLeafAttempts = 3
+
   private def compactLeaf(scoped: SparkSession, fs: FileSystem, dir: Path,
                           writerOptions: Map[String, String],
-                          allowMissing: Boolean,
-                          maxRetries: Int = 3): (Int, Int) = {
+                          allowMissing: Boolean): (Int, Int) = {
     recoverLeaf(fs, dir)
     if (!fs.exists(dir)) {
       // only the debris-discovery path may tolerate a still-missing dir
@@ -292,7 +296,7 @@ object Sink {
       if (fingerprint(visibleFiles()) != fingerprint(snapshot)) {
         fs.delete(tmp, true)
         attempt += 1
-        if (attempt >= maxRetries)
+        if (attempt >= MaxLeafAttempts)
           throw new java.io.IOException(
             s"compactParquet: concurrent writer detected on $dir after $attempt attempts — " +
               "compact sealed partitions only")

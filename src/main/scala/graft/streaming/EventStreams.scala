@@ -25,13 +25,6 @@ object EventStreams {
         sum(col("value").cast(DecimalType(14, 2))).cast("double").as("total"))
       .select(col("event_type"), col("w.start").as("win_start"), col("n"), col("total"))
 
-  /** Sliding 1h/30min counts per event type. */
-  def slidingAgg(events: DataFrame): DataFrame =
-    events
-      .groupBy(col("event_type"), window(col("ts"), "1 hour", "30 minutes").as("w"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("event_type"), col("w.start").as("win_start"), col("n"))
-
   /** Session windows (10-minute gap) per user. */
   def sessionAgg(events: DataFrame): DataFrame =
     events

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.ManifestStore
+import graft.sources.{ManifestLog, ManifestStore}
 
 /** Column mapping (r14, VERDICT r13 #2): RENAME COLUMN and DROP COLUMN as
   * METADATA-ONLY manifest commits — files keep their physical column
@@ -289,7 +289,7 @@ class ColumnMappingSpec extends SparkSpec {
     M.renameColumn(spark, root, "doc_id", "id") // reset: colMap -> empty
     val seeded = M.latestSnapshot(spark, root).get
     assert(seeded.colMap.isEmpty, s"seeded colMap: ${seeded.colMap}")
-    M.clearCachesForTest()
+    ManifestLog.clearCachesForTest()
     val cold = M.latestSnapshot(spark, root).get
     assert(cold.colMap == seeded.colMap && cold.colMap.isEmpty,
       s"cold delta-chain replay diverged from the committer-seeded snapshot: " +
@@ -314,7 +314,7 @@ class ColumnMappingSpec extends SparkSpec {
     M.restore(spark, root, preDdl) // colMap AND droppedPhys -> empty
     val seeded = M.latestSnapshot(spark, root).get
     assert(seeded.colMap.isEmpty && seeded.droppedPhys.isEmpty)
-    M.clearCachesForTest()
+    ManifestLog.clearCachesForTest()
     val cold = M.latestSnapshot(spark, root).get
     assert(cold.colMap.isEmpty && cold.droppedPhys.isEmpty,
       s"cold replay kept stale mapping state: colMap=${cold.colMap} " +

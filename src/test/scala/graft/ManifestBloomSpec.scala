@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
-import graft.sources.ManifestStore
+import graft.sources.{ManifestLog, ManifestStore}
 
 /** Per-file Bloom sidecar point lookups (r15, VERDICT r14 #6): an
   * optional write-time index registered in the manifest, consulted after
@@ -145,7 +145,7 @@ class ManifestBloomSpec extends SparkSpec {
         rootW)
     ManifestStore.buildBloomIndex(spark, rootW, Seq("id"))
     // cold resolution (fresh process state): the ref survives the chain
-    ManifestStore.clearCachesForTest()
+    ManifestLog.clearCachesForTest()
     val cold = ManifestStore.latestSnapshot(spark, rootW).get
     assert(cold.bloomIdx.exists(_.columns == Seq("id")),
       s"bloomidx must survive cold resolution: ${cold.bloomIdx}")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.ManifestStore
+import graft.sources.{ManifestLog, ManifestStore}
 
 /** Write-path constraints (r15, VERDICT r14 #1): NOT NULL and CHECK as
   * manifest-carried invariants, enforced inside the write pass on every
@@ -148,7 +148,7 @@ class ManifestConstraintsSpec extends SparkSpec {
     M.addCheckConstraint(spark, root, "ids_pos", "id >= 0")
     M.setProperties(spark, root, Map("owner" -> "pipeline-a", "pii" -> "false"))
     val seeded = M.latestSnapshot(spark, root).get
-    M.clearCachesForTest()
+    ManifestLog.clearCachesForTest()
     val cold = M.latestSnapshot(spark, root).get
     assert(cold.constraints == seeded.constraints && cold.constraints.nonEmpty,
       s"cold=${cold.constraints} seeded=${seeded.constraints}")
@@ -157,7 +157,7 @@ class ManifestConstraintsSpec extends SparkSpec {
     // dropping the constraint is itself a RESET-class delta: cold again
     M.dropConstraint(spark, root, "ids_pos")
     M.unsetProperties(spark, root, Seq("pii", "absent-key"))
-    M.clearCachesForTest()
+    ManifestLog.clearCachesForTest()
     val cold2 = M.latestSnapshot(spark, root).get
     assert(cold2.constraints.isEmpty, cold2.constraints.toString)
     assert(cold2.properties == Map("owner" -> "pipeline-a"))

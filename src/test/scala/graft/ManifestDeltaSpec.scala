@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import graft.sources.ManifestStore
+import graft.sources.{ManifestLog, ManifestStore}
 
 /** Delta-encoded manifest commits (r13, VERDICT r12 #1): a commit writes
   * the CHANGED entries only (`base=` + `rm=` + entry lines) under the v2
@@ -43,7 +43,7 @@ class ManifestDeltaSpec extends SparkSpec {
   test("a long append chain commits deltas with periodic checkpoints; " +
     "every version stays exactly replayable") {
     val root = freshRoot()
-    val n = ManifestStore.checkpointInterval + 5
+    val n = ManifestLog.checkpointInterval + 5
     for (i <- 0 until n)
       ManifestStore.append(spark, batch(i * 10, i * 10 + 10).coalesce(1), root)
     // v1 is a checkpoint (no base); most of the rest are deltas; at least
@@ -54,7 +54,7 @@ class ManifestDeltaSpec extends SparkSpec {
     assert(kinds.drop(1).contains(false),
       s"a chain of $n commits must contain a periodic checkpoint")
     // every version is exact — time travel across delta boundaries
-    for (v <- Seq(1L, 2L, ManifestStore.checkpointInterval.toLong, n.toLong))
+    for (v <- Seq(1L, 2L, ManifestLog.checkpointInterval.toLong, n.toLong))
       assert(ids(ManifestStore.readVersion(spark, root, v)) ==
         (0L until v * 10), s"version $v")
     // delta bytes are increment-sized: a later delta is much smaller than
@@ -192,8 +192,7 @@ class ManifestDeltaSpec extends SparkSpec {
     out.write("graft-manifest v2\nversion=2\nhalf-a-lin".getBytes("UTF-8"))
     out.close()
     f.setTimes(torn, System.currentTimeMillis() - 3600 * 1000L, -1L)
-    val v3 = ManifestStore.append(spark, batch(10, 20).coalesce(1), root,
-      tornGraceMs = 0L)
+    val v3 = ManifestStore.append(spark, batch(10, 20).coalesce(1), root)
     assert(v3 == 3L && isDelta(root, 3L))
     assert(manifestText(root, 3L).linesIterator
       .exists(_.trim == "base=1"), "the delta must anchor on the intact " +
@@ -265,8 +264,8 @@ class ManifestDeltaSpec extends SparkSpec {
   test("concurrent committers race across checkpoint boundaries without " +
     "losing a commit (interval=3 stress)") {
     val root = freshRoot()
-    val saved = ManifestStore.checkpointInterval
-    ManifestStore.checkpointInterval = 3
+    val saved = ManifestLog.checkpointInterval
+    ManifestLog.checkpointInterval = 3
     try {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
       try {
@@ -274,8 +273,7 @@ class ManifestDeltaSpec extends SparkSpec {
         val tasks: Seq[java.util.concurrent.Callable[Long]] =
           (0 until 16).map(i => () =>
             ManifestStore.append(spark,
-              batch(i * 100, i * 100 + 100).coalesce(1), root,
-              tornGraceMs = 0L))
+              batch(i * 100, i * 100 + 100).coalesce(1), root))
         val versions = pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq
         assert(versions.sorted == (1L to 16L),
           s"every commit must land its own version: $versions")
@@ -290,7 +288,7 @@ class ManifestDeltaSpec extends SparkSpec {
       // every version still exactly replayable after the race
       for (v <- Seq(1L, 5L, 9L, 16L))
         assert(ManifestStore.readVersion(spark, root, v).count() == v * 100)
-    } finally ManifestStore.checkpointInterval = saved
+    } finally ManifestLog.checkpointInterval = saved
   }
 
   test("addbytes= marker records each version's added data bytes") {

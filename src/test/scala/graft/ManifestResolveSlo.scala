@@ -110,14 +110,14 @@ object ManifestResolveSlo {
       // one O(entries) checkpoint parse + chain-apply + O(delta) parses
       // (the replay a periodic checkpoint bounds); steady stays the cache
       // hit. clearCachesForTest gives fresh-JVM behavior per rep.
-      val chain = graft.sources.ManifestStore.checkpointInterval - 2
+      val chain = graft.sources.ManifestLog.checkpointInterval - 2
       val batch = spark.range(0, 5).select(
         org.apache.spark.sql.functions.col("id"),
         org.apache.spark.sql.functions.lit("payload-string").as("payload"))
       (0 until chain).foreach(_ =>
         graft.sources.ManifestStore.append(spark, batch, rootN))
       val coldChain = (0 until 3).map { _ =>
-        graft.sources.ManifestStore.clearCachesForTest()
+        graft.sources.ManifestLog.clearCachesForTest()
         val t = System.nanoTime()
         require(graft.sources.ManifestStore.latestSnapshot(spark, rootN)
           .get.version == 1L + chain)

@@ -57,13 +57,13 @@ class ManifestSerializableDeleteSpec extends SparkSpec {
         ManifestStore.append(spark,
           batch(2000 + b * 100, 2000 + b * 100 + 10, "erase")
             .union(batch(3000 + b * 100, 3000 + b * 100 + 10, "keep")),
-          root, maxRetries = 50)
+          root)
       }
     })
     appender.start()
     val (deleted, _, quiescentV) = try
       ManifestStore.deleteWhereSerializable(spark, root,
-        Seq(EqualTo("grp", "erase")), maxPasses = 50, maxRetries = 50)
+        Seq(EqualTo("grp", "erase")), maxPasses = 50)
     finally appender.join()
     // the contract: AT THE QUIESCENT VERSION no matching row exists —
     // even though up to 6 appends with matching rows raced the loop

@@ -56,7 +56,7 @@ object ManifestSlo {
     val curate = graft.streaming.EventStreams
       .decontaminatingCurate(evalDocs, "doc_id", "text")
     val tableRoot = s"$work/table"
-    val retries0 = graft.sources.ManifestStore.commitRetries.sum()
+    val retries0 = graft.sources.ManifestLog.commitRetries.sum()
 
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(staging)
@@ -77,7 +77,7 @@ object ManifestSlo {
     q.processAllAvailable()
     q.stop()
     val wall = (System.nanoTime() - t0) / 1e9
-    val retries = graft.sources.ManifestStore.commitRetries.sum() - retries0
+    val retries = graft.sources.ManifestLog.commitRetries.sum() - retries0
 
     val lats = progress.map(_._3).sorted
     def pct(p: Double): Double =

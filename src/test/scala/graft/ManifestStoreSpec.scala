@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import graft.sources.ManifestStore
+import graft.sources.{ManifestLog, ManifestStore}
 
 /** Manifest-committed table (the object-store compaction posture —
   * [[graft.sources.Sink.requireAtomicRename]]'s documented alternative,
@@ -76,8 +76,9 @@ class ManifestStoreSpec extends SparkSpec {
     assert(ManifestStore.latestSnapshot(spark, root).get.version == 1L)
     assert(ids(ManifestStore.read(spark, root)) == (0L until 5L))
     // the next commit claims ABOVE the dead slot, never overwrites it
-    // (tornGraceMs=0: this test plays a CRASHED committer, already aged out)
-    val v = ManifestStore.append(spark, batch(5, 8), root, tornGraceMs = 0L)
+    // (the slot is an hour old: a CRASHED committer, long past the grace)
+    fs.setTimes(torn, System.currentTimeMillis() - 3600 * 1000L, -1L)
+    val v = ManifestStore.append(spark, batch(5, 8), root)
     assert(v == 3L, s"torn v2 must stay dead; got $v")
     assert(ids(ManifestStore.read(spark, root)) == (0L until 8L))
   }
@@ -89,15 +90,38 @@ class ManifestStoreSpec extends SparkSpec {
     // building past it immediately would orphan its commit when it lands
     val torn = new Path(s"$root/_manifests/v${"%020d".format(2)}.manifest")
     val fs = torn.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(torn, false).close() // 0 bytes = torn, mtime = now
-    val grace = 800L
+    fs.create(torn, false).close() // 0 bytes = torn
+    // aged to 800 ms short of the grace: the committer must wait out the rest
+    val left = 800L
+    fs.setTimes(torn, System.currentTimeMillis() - (ManifestLog.TornGraceMs - left), -1L)
     val t0 = System.nanoTime()
-    val v = ManifestStore.append(spark, batch(5, 8), root, tornGraceMs = grace)
+    val v = ManifestStore.append(spark, batch(5, 8), root)
     val waitedMs = (System.nanoTime() - t0) / 1000000
     assert(v == 3L)
-    assert(waitedMs >= grace / 2,
+    assert(waitedMs >= left / 2,
       s"committer must wait out the torn slot's grace, waited only ${waitedMs}ms")
     assert(ids(ManifestStore.read(spark, root)) == (0L until 8L))
+  }
+
+  test("a commit that loses 11 consecutive races refuses, commits nothing, leaves the table readable") {
+    val root = freshRoot()
+    ManifestStore.append(spark, batch(0, 5), root)
+    // every create-exclusive of a manifest loses, as if another committer
+    // took each slot first
+    val losing = new LosingCommitFs
+    losing.initialize(java.net.URI.create("losefs:///"), spark.sparkContext.hadoopConfiguration)
+    val rootP = losing.makeQualified(new Path(root))
+    val retries0 = ManifestLog.commitRetries.sum()
+    val e = intercept[java.io.IOException] {
+      ManifestLog.commit(losing, rootP)(base => base.map(_.copy(op = "append")))
+    }
+    assert(e.getMessage.contains("lost 11 consecutive races"), e.getMessage)
+    assert(ManifestLog.commitRetries.sum() - retries0 >= 11L)
+    val v2 = new Path(s"$root/_manifests/v${"%020d".format(2)}.manifest")
+    assert(!v2.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(v2),
+      "a refused commit must leave no manifest behind")
+    assert(ManifestStore.latestSnapshot(spark, root).get.version == 1L)
+    assert(ids(ManifestStore.read(spark, root)) == (0L until 5L))
   }
 
   test("an empty append yields a READABLE zero-row table, never an unreadable commit") {
@@ -129,7 +153,7 @@ class ManifestStoreSpec extends SparkSpec {
         pool.submit(new java.util.concurrent.Callable[Unit] {
           def call(): Unit = for (b <- 0 until perThread) {
             val lo = (t * perThread + b) * 10
-            ManifestStore.append(spark, batch(lo, lo + 10), root, maxRetries = 50)
+            ManifestStore.append(spark, batch(lo, lo + 10), root)
           }
         })
       }
@@ -228,7 +252,7 @@ class ManifestStoreSpec extends SparkSpec {
     assert(n == 3)
     val seeded = ManifestStore.latestSnapshot(spark, root).get.files
       .map(f => f.path -> f.dv.map(_.path))
-    ManifestStore.clearCachesForTest()
+    ManifestLog.clearCachesForTest()
     val cold = ManifestStore.latestSnapshot(spark, root).get.files
       .map(f => f.path -> f.dv.map(_.path))
     assert(seeded == cold,
@@ -1020,13 +1044,13 @@ class ManifestStoreSpec extends SparkSpec {
     val bad = new OverwritingFs
     bad.initialize(java.net.URI.create("badfs:///"), conf)
     val e = intercept[IllegalStateException] {
-      ManifestStore.verifyCommitPoint(bad, root)
+      ManifestLog.verifyCommitPoint(bad, root)
     }
     assert(e.getMessage.contains("commit-point"), e.getMessage)
 
     val good = new RenamedSchemeFs // RawLocal semantics under a non-file scheme
     good.initialize(java.net.URI.create("goodfs:///"), conf)
-    ManifestStore.verifyCommitPoint(good, root) // must not throw
+    ManifestLog.verifyCommitPoint(good, root) // must not throw
     // probes clean up after themselves
     val fs = root.getFileSystem(conf)
     val leftovers = fs.listStatus(new Path(root, "_manifests"))
@@ -1042,7 +1066,7 @@ class ManifestStoreSpec extends SparkSpec {
     */
   test("appendBatch under forced redelivery at rate: zero duplicate rows") {
     val root = freshRoot()
-    val retriesBefore = ManifestStore.commitRetries.sum()
+    val retriesBefore = ManifestLog.commitRetries.sum()
     for (b <- 0 until 8) {
       val df = batch(b * 10, b * 10 + 10)
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
@@ -1050,8 +1074,7 @@ class ManifestStoreSpec extends SparkSpec {
         val tasks = (0 until 2).map(_ => pool.submit(
           new java.util.concurrent.Callable[Long] {
             def call(): Long =
-              ManifestStore.appendBatch(spark, df, root, "rate-sink", b.toLong,
-                maxRetries = 50)
+              ManifestStore.appendBatch(spark, df, root, "rate-sink", b.toLong)
           }))
         tasks.foreach(_.get())
       } finally pool.shutdown()
@@ -1064,7 +1087,7 @@ class ManifestStoreSpec extends SparkSpec {
     ManifestStore.vacuum(spark, root, keepVersions = 1, minAgeMs = 0L)
     assert(ids(ManifestStore.read(spark, root)) == (0L until 80L))
     // the retry counter is an ops signal, monotone under contention
-    assert(ManifestStore.commitRetries.sum() >= retriesBefore)
+    assert(ManifestLog.commitRetries.sum() >= retriesBefore)
   }
 
   test("appendBatch drives a real Structured Streaming foreachBatch sink exactly-once") {
@@ -1865,7 +1888,7 @@ class ManifestStoreSpec extends SparkSpec {
       DvBitmap.writeFile(conf, f, md5(data), DvBitmap.build((0L until 1000L).toArray))
       f.toString
     }
-    ManifestStore.clearCachesForTest()
+    ManifestLog.clearCachesForTest()
     assert(ManifestStore.read(spark, root).orderBy("id").collect().toSeq == rows,
       "a stray dv file in an fk leaf must not change what the table reads")
     val (nd2, _, vd2) = ManifestStore.deleteWhereMergeOnRead(spark, root, Seq(LessThan("id", 35L)))
@@ -2186,7 +2209,8 @@ class ManifestStoreSpec extends SparkSpec {
 
     // 30% of file 0 deleted: BELOW the 0.5 threshold, vector stays
     val (n1, _, v1) = ManifestStore.deleteWhereMergeOnRead(spark, root,
-      Seq(LessThan("id", 75L)), autoMaterializeFraction = Some(0.5))
+      Seq(LessThan("id", 75L)))
+    ManifestStore.materializeDeletes(spark, root, minDvFraction = 0.5)
     assert(n1 == 75L && v1 > 0)
     val s1 = ManifestStore.latestSnapshot(spark, root).get
     assert(s1.version == v1, "below the threshold nothing else commits")
@@ -2194,7 +2218,8 @@ class ManifestStoreSpec extends SparkSpec {
 
     // push file 0 to 60% deleted: the follow-up commit retires it
     val (n2, _, v2) = ManifestStore.deleteWhereMergeOnRead(spark, root,
-      Seq(LessThan("id", 150L)), autoMaterializeFraction = Some(0.5))
+      Seq(LessThan("id", 150L)))
+    ManifestStore.materializeDeletes(spark, root, minDvFraction = 0.5)
     assert(n2 == 75L && v2 > 0)
     val s2 = ManifestStore.latestSnapshot(spark, root).get
     assert(s2.version == v2 + 1, "retirement is a follow-up commit")
@@ -2423,4 +2448,28 @@ private class OverwritingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   */
 private class RenamedSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("goodfs:///")
+}
+
+/** RawLocal semantics under a non-`file:` scheme whose create-exclusive of
+  * a manifest always loses the race (the slot "already exists").
+  */
+private class LosingCommitFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("losefs:///")
+  private def lose(f: Path, overwrite: Boolean): Unit =
+    if (!overwrite && f.getName.endsWith(".manifest"))
+      throw new org.apache.hadoop.fs.FileAlreadyExistsException(s"$f exists")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    lose(f, overwrite)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: org.apache.hadoop.fs.permission.FsPermission,
+                      overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long, progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    lose(f, overwrite)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
 }

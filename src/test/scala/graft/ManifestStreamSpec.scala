@@ -155,8 +155,8 @@ class ManifestStreamSpec extends SparkSpec {
     out.write("graft-manifest v2\nversion=2\nhalf-a-lin".getBytes("UTF-8"))
     out.close()
     fs.setTimes(torn, System.currentTimeMillis() - 3600 * 1000L, -1L)
-    M.append(spark, Seq(3L, 4L).toDF("id"), src, tornGraceMs = 0L) // v3
-    M.append(spark, Seq(5L, 6L).toDF("id"), src, tornGraceMs = 0L) // v4
+    M.append(spark, Seq(3L, 4L).toDF("id"), src) // v3
+    M.append(spark, Seq(5L, 6L).toDF("id"), src) // v4
     // maxVersionsPerTrigger=1 with from=1 used to compute end = from+1 = 2
     // — the torn slot — which getBatch cannot resolve; the engine WALs the
     // offset first, so every restart replayed the same bad version. The

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.ManifestStore
+import graft.sources.{ManifestLog, ManifestStore}
 
 /** `ALTER COLUMN ... TYPE` widening (r15, VERDICT r14 #2): one
   * metadata-only schema commit — old files keep their narrow physical
@@ -112,7 +112,7 @@ class ManifestWideningSpec extends SparkSpec {
       .toDF("id", "v").repartitionByRange(4, col("id")), root)
     M.renameColumn(spark, root, "v", "val") // mapped: val -> v
     M.alterColumnType(spark, root, "val", LongType)
-    M.clearCachesForTest()
+    ManifestLog.clearCachesForTest()
     val snap = M.latestSnapshot(spark, root).get
     assert(snap.schema.get("val").dataType == LongType,
       "the widened type must survive cold delta-chain resolution")
